@@ -20,6 +20,14 @@ from pegasus_spark.textops import dedup as D
 from pegasus_spark.textops import similarity as S
 from pegasus_spark.textops import text as T
 
+# The oracles that mirror with_lang_guess / with_quality / gopher_flags
+# build their marker lists and score weights from textops.text, so they
+# cannot drift from the scorer: DuckDB list literals per language.
+_SQL_STOPS = {
+    lang: "[" + ",".join(f"'{w}'" for w in words) + "]"
+    for lang, words in T.LANG_MARKERS.items()
+}
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -61,14 +69,14 @@ def q_doc_quality(spark, sf_dir):
     )
 
 
-ORACLE_DOC_QUALITY = r"""
+ORACLE_DOC_QUALITY = rf"""
 WITH t AS (
   SELECT doc_id, trim(text) AS tt,
          regexp_split_to_array(trim(text), '\s+') AS toks
   FROM documents
 ), m AS (
   SELECT doc_id, length(tt) AS tlen, len(toks) AS n,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop,
          length(tt) - length(regexp_replace(tt, '[.,!?;:]', '', 'g')) AS n_punct
   FROM t
 )
@@ -76,9 +84,9 @@ SELECT doc_id, n AS n_tokens,
        round(n_stop * 1.0 / n, 4) AS stop_ratio,
        round((tlen - (n - 1)) * 1.0 / n, 4) AS mean_word_len,
        round(n_punct * 1.0 / tlen, 4) AS punct_ratio,
-       round(least(n / 64.0, 1.0) * 0.5
-             + (1.0 - least(n_stop * 1.0 / n, 1.0)) * 0.3
-             + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * 0.2, 4) AS quality
+       round(least(n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+             + (1.0 - least(n_stop * 1.0 / n, 1.0)) * {T.QUALITY_W_NONSTOP}
+             + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4) AS quality
 FROM m ORDER BY doc_id
 """
 
@@ -94,15 +102,15 @@ def q_lang_id(spark, sf_dir):
     )
 
 
-ORACLE_LANG_ID = r"""
+ORACLE_LANG_ID = rf"""
 WITH t AS (
   SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents
 ), s AS (
   SELECT doc_id, lang,
-    len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS hits_en,
-    len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','zu'], x))) AS hits_de,
-    len(list_filter(toks, x -> list_contains(['el','los','las','es','y','que'], x))) AS hits_es,
-    len(list_filter(toks, x -> list_contains(['le','la','les','et','est','que'], x))) AS hits_fr
+    len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS hits_en,
+    len(list_filter(toks, x -> list_contains({_SQL_STOPS['de']}, x))) AS hits_de,
+    len(list_filter(toks, x -> list_contains({_SQL_STOPS['es']}, x))) AS hits_es,
+    len(list_filter(toks, x -> list_contains({_SQL_STOPS['fr']}, x))) AS hits_fr
   FROM t
 )
 SELECT doc_id, hits_en, hits_de, hits_es, hits_fr,
@@ -754,7 +762,7 @@ def q_dup_quality_gap(spark, sf_dir):
     )
 
 
-ORACLE_DUP_QUALITY_GAP = _ORACLE_MINHASH_CC_BODY + r""",
+ORACLE_DUP_QUALITY_GAP = _ORACLE_MINHASH_CC_BODY + rf""",
 assign AS (
   SELECT v.doc_id,
          CAST(least(v.doc_id, coalesce(MIN(r.d), v.doc_id)) AS BIGINT) AS cluster_id
@@ -769,13 +777,13 @@ multi AS (
 ),
 q AS (
   SELECT m.doc_id, m.n AS nt,
-         CAST(round(round(least(m.n / 64.0, 1.0) * 0.5
-               + (1.0 - least(m.n_stop * 1.0 / m.n, 1.0)) * 0.3
-               + least(((m.tlen - (m.n - 1)) * 1.0 / m.n) / 8.0, 1.0) * 0.2, 4)
+         CAST(round(round(least(m.n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+               + (1.0 - least(m.n_stop * 1.0 / m.n, 1.0)) * {T.QUALITY_W_NONSTOP}
+               + least(((m.tlen - (m.n - 1)) * 1.0 / m.n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4)
              * 10000, 0) AS BIGINT) AS q4
   FROM (
     SELECT doc_id, length(tt) AS tlen, len(toks) AS n,
-           len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop
+           len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop
     FROM (
       SELECT doc_id, tt, regexp_split_to_array(tt, '\s+') AS toks
       FROM t
@@ -1139,7 +1147,7 @@ ORDER BY v.doc_id
 # keeper is first_value per cluster ordered by (rounded quality DESC,
 # doc_id ASC) — identical decimal ordering on both engines. Shared by the
 # dedup_keepers / curated_corpus / dropped_docs oracles.
-_ORACLE_KEEPER_CTES = _ORACLE_CROSS_MODAL_BODY + r""",
+_ORACLE_KEEPER_CTES = _ORACLE_CROSS_MODAL_BODY + rf""",
 clusters AS (
   SELECT v.doc_id,
          CAST(least(v.doc_id, coalesce(MIN(r.d), v.doc_id)) AS BIGINT) AS cluster_id
@@ -1153,14 +1161,14 @@ tq AS (
 ),
 mq AS (
   SELECT doc_id, length(qt) AS tlen, len(toks) AS n,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop
   FROM tq
 ),
 qq AS (
   SELECT doc_id,
-         round(least(n / 64.0, 1.0) * 0.5
-               + (1.0 - least(n_stop * 1.0 / n, 1.0)) * 0.3
-               + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * 0.2, 4) AS quality
+         round(least(n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+               + (1.0 - least(n_stop * 1.0 / n, 1.0)) * {T.QUALITY_W_NONSTOP}
+               + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4) AS quality
   FROM mq
 ),
 kk AS (
@@ -1438,26 +1446,26 @@ def q_curation_pipeline(spark, sf_dir):
     )
 
 
-ORACLE_CURATION_PIPELINE = r"""
+ORACLE_CURATION_PIPELINE = rf"""
 WITH t AS (
   SELECT doc_id, lang, trim(text) AS tt,
          regexp_split_to_array(trim(text), '\s+') AS toks, text
   FROM documents
 ), m AS (
   SELECT doc_id, lang, text, length(tt) AS tlen, len(toks) AS n,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS hits_en,
-         len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','zu'], x))) AS hits_de,
-         len(list_filter(toks, x -> list_contains(['el','los','las','es','y','que'], x))) AS hits_es,
-         len(list_filter(toks, x -> list_contains(['le','la','les','et','est','que'], x))) AS hits_fr
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS hits_en,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['de']}, x))) AS hits_de,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['es']}, x))) AS hits_es,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['fr']}, x))) AS hits_fr
   FROM t
 ), scored AS (
   SELECT doc_id, lang, text, n AS n_tokens,
     CASE WHEN hits_en >= hits_de AND hits_en >= hits_es AND hits_en >= hits_fr THEN 'en'
          WHEN hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
          WHEN hits_es >= hits_fr THEN 'es' ELSE 'fr' END AS lang_guess,
-    round(least(n / 64.0, 1.0) * 0.5
-          + (1.0 - least(hits_en * 1.0 / n, 1.0)) * 0.3
-          + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * 0.2, 4) AS quality
+    round(least(n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+          + (1.0 - least(hits_en * 1.0 / n, 1.0)) * {T.QUALITY_W_NONSTOP}
+          + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4) AS quality
   FROM m
 ), deduped AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rk FROM scored
@@ -1990,20 +1998,20 @@ def q_pareto_docs(spark, sf_dir):
     return T.pareto_frontier(d, x_col="quality", y_col="n_tokens")
 
 
-ORACLE_PARETO_DOCS = r"""
+ORACLE_PARETO_DOCS = rf"""
 WITH t AS (
   SELECT doc_id, trim(text) AS tt,
          regexp_split_to_array(trim(text), '\s+') AS toks
   FROM documents
 ), m AS (
   SELECT doc_id, length(tt) AS tlen, len(toks) AS n,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop
   FROM t
 ), q AS (
   SELECT doc_id, CAST(n AS INT) AS n_tokens,
-       round(least(n / 64.0, 1.0) * 0.5
-             + (1.0 - least(n_stop * 1.0 / n, 1.0)) * 0.3
-             + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * 0.2, 4) AS quality
+       round(least(n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+             + (1.0 - least(n_stop * 1.0 / n, 1.0)) * {T.QUALITY_W_NONSTOP}
+             + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4) AS quality
   FROM m
 ),
 pts AS (SELECT DISTINCT quality, n_tokens FROM q),
@@ -2440,14 +2448,14 @@ def q_gopher_rules(spark, sf_dir):
     )
 
 
-ORACLE_GOPHER_RULES = r"""
+ORACLE_GOPHER_RULES = rf"""
 WITH t AS (
   SELECT doc_id, trim(text) AS tt,
          regexp_split_to_array(trim(text), '\s+') AS toks
   FROM documents
 ), m AS (
   SELECT doc_id, len(toks) AS n, length(tt) AS tlen,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop,
          len(list_distinct(toks)) AS n_uniq
   FROM t
 ), r AS (
@@ -2843,19 +2851,19 @@ def q_threshold_sweep(spark, sf_dir):
     return T.quality_threshold_sweep(_docs(spark, sf_dir))
 
 
-ORACLE_THRESHOLD_SWEEP = r"""
+ORACLE_THRESHOLD_SWEEP = rf"""
 WITH t AS (
   SELECT trim(text) AS tt, regexp_split_to_array(trim(text), '\s+') AS toks
   FROM documents
 ), m AS (
   SELECT length(tt) AS tlen, len(toks) AS n,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop
   FROM t
 ), q AS (
   SELECT n AS n_tokens,
-         round(least(n / 64.0, 1.0) * 0.5
-               + (1.0 - least(n_stop * 1.0 / n, 1.0)) * 0.3
-               + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * 0.2, 4) AS quality
+         round(least(n / 64.0, 1.0) * {T.QUALITY_W_LENGTH}
+               + (1.0 - least(n_stop * 1.0 / n, 1.0)) * {T.QUALITY_W_NONSTOP}
+               + least(((tlen - (n - 1)) * 1.0 / n) / 8.0, 1.0) * {T.QUALITY_W_WORDLEN}, 4) AS quality
   FROM m
 ), hist AS (
   SELECT CAST(least(floor(quality * 10), 9) AS INT) AS threshold_x10,
@@ -4086,8 +4094,8 @@ SELECT source,
        CAST(SUM(resolution) AS BIGINT) AS res_total,
        CAST(SUM(CASE WHEN is_keeper THEN resolution ELSE 0 END) AS BIGINT)
          AS res_kept,
-       ((SUM(resolution) - SUM(CASE WHEN is_keeper THEN resolution ELSE 0 END))
-        * 1000) // SUM(resolution) AS savings_milli
+       CAST(((SUM(resolution) - SUM(CASE WHEN is_keeper THEN resolution ELSE 0 END))
+        * 1000) // SUM(resolution) AS BIGINT) AS savings_milli
 FROM kk GROUP BY source ORDER BY source
 """
 
@@ -4748,14 +4756,14 @@ def q_rule_ablation(spark, sf_dir):
     return T.rule_ablation(_docs(spark, sf_dir))
 
 
-ORACLE_RULE_ABLATION = r"""
+ORACLE_RULE_ABLATION = rf"""
 WITH t AS (
   SELECT doc_id, trim(text) AS tt,
          regexp_split_to_array(trim(text), '\s+') AS toks
   FROM documents
 ), m AS (
   SELECT doc_id, len(toks) AS n, length(tt) AS tlen,
-         len(list_filter(toks, x -> list_contains(['the','a','of','and','is','to'], x))) AS n_stop,
+         len(list_filter(toks, x -> list_contains({_SQL_STOPS['en']}, x))) AS n_stop,
          len(list_distinct(toks)) AS n_uniq
   FROM t
 ), r AS (

@@ -1139,12 +1139,12 @@ r AS (
 )
 SELECT n AS n_users,
        CAST(SUM(cnt) AS BIGINT) AS n_events,
-       (SUM(CASE WHEN rn <= (10 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
-         // SUM(cnt) AS top10_share_milli,
-       (SUM(CASE WHEN rn <= (20 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
-         // SUM(cnt) AS top20_share_milli,
-       (SUM(CASE WHEN rn <= (50 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
-         // SUM(cnt) AS top50_share_milli
+       CAST((SUM(CASE WHEN rn <= (10 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
+         // SUM(cnt) AS BIGINT) AS top10_share_milli,
+       CAST((SUM(CASE WHEN rn <= (20 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
+         // SUM(cnt) AS BIGINT) AS top20_share_milli,
+       CAST((SUM(CASE WHEN rn <= (50 * n + 99) // 100 THEN cnt ELSE 0 END) * 1000)
+         // SUM(cnt) AS BIGINT) AS top50_share_milli
 FROM r, nu GROUP BY n
 """
 
@@ -1284,8 +1284,8 @@ SELECT day,
        CAST(SUM(has_view) AS BIGINT) AS n_view_sessions,
        CAST(SUM(CASE WHEN has_view = 1 AND has_purchase = 0 THEN 1 ELSE 0 END)
             AS BIGINT) AS n_abandoned,
-       (SUM(CASE WHEN has_view = 1 AND has_purchase = 0 THEN 1 ELSE 0 END) * 1000)
-         // NULLIF(SUM(has_view), 0) AS abandon_rate_milli
+       CAST((SUM(CASE WHEN has_view = 1 AND has_purchase = 0 THEN 1 ELSE 0 END) * 1000)
+         // NULLIF(SUM(has_view), 0) AS BIGINT) AS abandon_rate_milli
 FROM sess GROUP BY day ORDER BY day
 """
 
@@ -1453,10 +1453,10 @@ WITH d AS (
   FROM events GROUP BY CAST(ts AS DATE)
 )
 SELECT dy, n_events,
-       (SUM(n_events) OVER (ORDER BY dy ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+       CAST((SUM(n_events) OVER (ORDER BY dy ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
         * 1000)
        // COUNT(*) OVER (ORDER BY dy ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         AS ma7_milli
+         AS BIGINT) AS ma7_milli
 FROM d ORDER BY dy
 """
 

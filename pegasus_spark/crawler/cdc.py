@@ -36,6 +36,14 @@ APARTMENT_COLS = [
     "region",
 ]
 
+# the apartments table as the store writes it, columns in APARTMENT_COLS order
+APARTMENTS_DDL = (
+    "location string, aid string, price int, size string, total int, "
+    "nts bigint, uts bigint, subway int, station string, smeter int, "
+    "floor string, tfloor int, year int, withlift string, visitcnt int, "
+    "region string"
+)
+
 # J3 diffable fields, in struct order (apartments.go:23-39), minus: aid (join
 # key), nts (copied pre-diff), uts (int64 → skipped by the reference's kind
 # check), visitcnt (blacklist, updatedb.go:336-338).
@@ -46,13 +54,7 @@ META_DIFF_FIELDS = [
 
 
 def empty_apartments(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "location string, aid string, price int, size string, total int, "
-        "nts bigint, uts bigint, subway int, station string, smeter int, "
-        "floor string, tfloor int, year int, withlift string, visitcnt int, "
-        "region string",
-    )
+    return spark.createDataFrame([], APARTMENTS_DDL)
 
 
 def merge_apartments(

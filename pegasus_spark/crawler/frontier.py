@@ -41,7 +41,8 @@ from dataclasses import asdict, dataclass, field, fields as dc_fields
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pegasus_spark.crawler.bloom import BloomShards
+from pegasus_spark.crawler.bloom import SHARD_SCHEMA, BloomShards
+from pegasus_spark.crawler.cdc import APARTMENTS_DDL
 from pegasus_spark.crawler.urlnorm import host_of, with_url_columns
 
 FRONTIER_DDL = (
@@ -49,6 +50,7 @@ FRONTIER_DDL = (
     "priority int, page int, depth int, region string, state string, "
     "discovered_round int, retry_cnt int"
 )
+LINEAGE_DDL = "host string, state string, url_cnt bigint"
 
 N_SALTS = 8  # hot-host write-skew breaker
 N_FRONTIER_BUCKETS = 32  # hash(host) partition count (thousands at 10^10 scale)
@@ -318,6 +320,15 @@ class FrontierStore:
         os.replace(tmp, self.manifest_path)  # atomic commit point
 
     # partition manifests ------------------------------------------------------
+    # Reads pass the schema the store wrote (columns in written order), so
+    # building a read does not run Spark's one-task footer job to infer it.
+    # Tables without an entry (clusters, legacy flat snapshots) still infer.
+    _SCHEMAS = {
+        "frontier": FRONTIER_DDL,
+        "lineage": LINEAGE_DDL,
+        "apartments": APARTMENTS_DDL,
+    }
+
     # Each version dir holds data for its DIRTY partitions only plus a
     # parts.json mapping every live partition -> the version that owns its
     # current rows (Iceberg manifest-list stand-in). Readers union the
@@ -344,7 +355,10 @@ class FrontierStore:
         paths = [self._p(table, f"v{v}", "data", f"pk={k}") for k, v in sorted(sel.items())]
         if not paths:
             raise FileNotFoundError(f"{table}: no partitions for {keys}")
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if table in self._SCHEMAS:
+            reader = reader.schema(self._SCHEMAS[table])
+        return reader.parquet(*paths)
 
     def _write_partitioned(
         self, table: str, df: DataFrame, version: int, key_col, n_partitions: int | None
@@ -415,7 +429,10 @@ class FrontierStore:
     def read_bloom(self, versions: list[int]) -> DataFrame | None:
         if not versions:
             return None
-        dfs = [self.spark.read.parquet(self._p("bloom", f"v{v}")) for v in versions]
+        dfs = [
+            self.spark.read.schema(SHARD_SCHEMA).parquet(self._p("bloom", f"v{v}"))
+            for v in versions
+        ]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -6,6 +6,31 @@ timezone (so date math matches the DuckDB oracle), and a shuffle-partition
 count sized to the local core count rather than the 200 default (at cluster
 scale this is overridden by AQE coalescing anyway).
 
+The generated-code cache holds 512 classes instead of Spark's 100. Spark
+compiles one class per distinct generated source (whole-stage plans,
+projections, predicates, orderings) into a JVM-wide LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries. A larger cache saves work
+only where one JVM compiles the same source twice. Measured with Spark's
+CodegenMetrics on a 4-core VM at ``local[2]``, 100 -> 512 entries:
+
+- The crawl repeats many of its plans from round to round. A fresh crawl of
+  the benchmark site in a fresh JVM compiled 545-568 classes, now 344. A
+  further run in the same process (``new_run``, then drain) compiled
+  530-562, now 28-54.
+- One pass of the benchmark's analytics queries generates about 230
+  distinct classes and repeats none of them. A fresh JVM that runs them
+  once (the CLI, ``bench.py``) compiles the same 228-233 classes either way.
+  A JVM that runs them again (the benchmark's warm-up then timed pass, a
+  test session) recompiled 225-231 classes in the second pass, now 0.
+
+Plans that inline a per-round literal (the crawler's round number) are new
+classes every round, so a long-lived crawler fills the cache. 512, 1024
+and 4096 gave the same counts above; 512, the smallest, bounds what
+the stale classes hold. After eight further runs (round 44) the cache was
+full: its keys held 4.7 MB of generated source (0.5 MB at 100 entries) and
+metaspace was 2.9 MB larger. The conf is static: it takes effect in the
+first session a JVM builds.
+
 Replaces the reference's config-server boot path
 (/root/reference/src/pegasus/cfgmgr/mgr.go:12,
  /root/reference/src/pegasus/worker/workermain.go:45-80): all of the
@@ -18,6 +43,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries: holds the classes of a whole crawl
+# (~340) or analytics pass (~230); see the module docstring
+CODEGEN_CACHE_ENTRIES = 512
 
 
 def get_spark(
@@ -80,6 +109,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -18,14 +18,22 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-# language marker stopwords — tiny fixed sets, mirrored verbatim in the SQL
-# oracle. Order of the argmax CASE chain is part of the contract.
+# language marker stopwords — tiny fixed sets; the SQL oracles build their
+# list literals from these. Order of the argmax CASE chain is part of the
+# contract.
 LANG_MARKERS = {
     "en": ["the", "a", "of", "and", "is", "to"],
     "de": ["der", "die", "das", "und", "ist", "zu"],
     "es": ["el", "los", "las", "es", "y", "que"],
     "fr": ["le", "la", "les", "et", "est", "que"],
 }
+
+
+# with_quality's score weights: length, non-stopword share, mean word
+# length. The SQL oracles that mirror the scorer are built from these too.
+QUALITY_W_LENGTH = 0.5
+QUALITY_W_NONSTOP = 0.3
+QUALITY_W_WORDLEN = 0.2
 
 
 def tokens_col(text_col: str = "text") -> Column:
@@ -82,9 +90,9 @@ def with_quality(df: DataFrame) -> DataFrame:
         tlen - F.length(F.regexp_replace(F.trim(F.col("text")), r"[.,!?;:]", ""))
     ) / tlen
     score = (
-        F.least(n / F.lit(64.0), F.lit(1.0)) * F.lit(0.5)
-        + (F.lit(1.0) - F.least(n_stop / n, F.lit(1.0))) * F.lit(0.3)
-        + F.least(mean_wlen / F.lit(8.0), F.lit(1.0)) * F.lit(0.2)
+        F.least(n / F.lit(64.0), F.lit(1.0)) * F.lit(QUALITY_W_LENGTH)
+        + (F.lit(1.0) - F.least(n_stop / n, F.lit(1.0))) * F.lit(QUALITY_W_NONSTOP)
+        + F.least(mean_wlen / F.lit(8.0), F.lit(1.0)) * F.lit(QUALITY_W_WORDLEN)
     )
     return (
         df.withColumn("n_tokens", n)

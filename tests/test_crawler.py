@@ -220,6 +220,52 @@ def test_incremental_store_reuses_clean_partitions(crawl):
         assert json.load(f)["frontier_version"] == ckpt.frontier_version
 
 
+def test_store_reads_submit_no_spark_jobs(crawl, spark):
+    """Store reads pass the schema the store wrote, so building them runs
+    no parquet schema-inference job; that schema equals what Spark infers
+    from the files, column names, types and order alike."""
+    _, sched, _, ckpt = crawl
+    store = sched.store
+    tracker = spark.sparkContext.statusTracker()
+    buckets = sorted(store._load_parts("frontier", ckpt.frontier_version))[:2]
+    # This site has 36 regions. Above 32 paths Spark lists files with a job
+    # of its own (spark.sql.sources.parallelPartitionDiscovery.threshold);
+    # that listing job is not the one under test, so it is kept out here.
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old_threshold = spark.conf.get(threshold)
+    spark.conf.set(threshold, "1000")
+    try:
+        before = set(tracker.getJobIdsForGroup())
+        reads = {
+            "frontier": store.read_frontier(ckpt.frontier_version),
+            "frontier_buckets": store.read_frontier_buckets(ckpt.frontier_version, buckets),
+            "lineage": store.read_lineage(ckpt.lineage_version),
+            "bloom": store.read_bloom(ckpt.bloom_versions),
+            "apartments": store.read_apartments(ckpt.apartments_version),
+        }
+        new_jobs = set(tracker.getJobIdsForGroup()) - before
+    finally:
+        spark.conf.set(threshold, old_threshold)
+    assert not new_jobs, f"store reads submitted Spark jobs {sorted(new_jobs)}"
+
+    def inferred(table, version):
+        k, v = sorted(store._load_parts(table, version).items())[0]
+        return spark.read.parquet(store._p(table, f"v{v}", "data", f"pk={k}")).schema
+
+    frontier = inferred("frontier", ckpt.frontier_version)
+    want = {
+        "frontier": frontier,
+        "frontier_buckets": frontier,
+        "lineage": inferred("lineage", ckpt.lineage_version),
+        "bloom": spark.read.parquet(store._p("bloom", f"v{ckpt.bloom_versions[0]}")).schema,
+        "apartments": inferred("apartments", ckpt.apartments_version),
+    }
+    for name, df in reads.items():
+        got = [(f.name, f.dataType) for f in df.schema]
+        exp = [(f.name, f.dataType) for f in want[name]]
+        assert got == exp, f"{name}: read schema {got} != written {exp}"
+
+
 def test_partitioned_bloom_path_end_to_end(spark, tmp_path_factory):
     """Force the 10^10-key membership path (bloom_partitioned_threshold=-1 ⇒
     every round probes via shard cogroup, no driver dict / broadcast) through

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import SF_SMOKE_DIR
 from tests.oracle_compare import compare, duckdb_conn
 
 import __spark_entry__ as entrymod
@@ -36,3 +37,22 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() >= 0
+
+
+# `SUM(bigint) * 1000 // ...` is HUGEINT in DuckDB. Read through pandas it
+# becomes float64 while Spark's DIV gives int64, so these oracles CAST their
+# ratio columns to BIGINT.
+MILLI_RATIO_ORACLES = [
+    "daily_volume_ma7", "image_dedup_savings", "session_abandonment", "user_concentration",
+]
+
+
+@pytest.mark.parametrize("name", MILLI_RATIO_ORACLES)
+def test_oracle_outputs_no_hugeint(name):
+    con = duckdb_conn(SF_SMOKE_DIR)
+    try:
+        rel = con.sql(entrymod.oracle_sql()[name])
+        huge = [c for c, t in zip(rel.columns, rel.types) if str(t) == "HUGEINT"]
+    finally:
+        con.close()
+    assert not huge, f"{name}: HUGEINT columns {huge}"

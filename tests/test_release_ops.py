@@ -1189,10 +1189,12 @@ class TestRelationalBatchPlans:
 
         qe = q_large_orders(spark, SF_TEST_DIR)._jdf.queryExecution()
         opt = qe.optimizedPlan().toString()
-        join_at = opt.index("Join")
-        agg_at = opt.index("Aggregate", join_at)  # agg nested below a join
+        join_at = opt.find("Join")
+        assert join_at >= 0, opt
+        agg_at = opt.find("Aggregate", join_at)  # agg nested below a join
         assert agg_at > join_at, opt
-        filt_at = opt.index("Filter", join_at)
+        filt_at = opt.find("Filter", join_at)
+        assert filt_at > join_at, opt
         assert "sum_qty" in opt[filt_at:agg_at + 400], opt
         assert "TakeOrderedAndProject" in qe.executedPlan().toString()
 
