@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pegasus_spark.session import local_df
+
 SHARD_SCHEMA = StructType(
     [
         StructField("shard", IntegerType()),
@@ -376,8 +378,7 @@ class CuckooShards:
             "shard", shard_of(F.col("h64"), self.n_shards)
         )
         if shards_df is None:
-            empty = keys.sparkSession.createDataFrame([], SHARD_SCHEMA)
-            shards_df = empty
+            shards_df = local_df(keys.sparkSession, [], SHARD_SCHEMA)
         return (
             keys.groupBy("shard")
             .cogroup(self.latest(shards_df).groupBy("shard"))

@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from pegasus_spark.session import local_df
+
 APARTMENT_COLS = [
     "location", "aid", "price", "size", "total", "nts", "uts", "subway",
     "station", "smeter", "floor", "tfloor", "year", "withlift", "visitcnt",
@@ -54,7 +56,7 @@ META_DIFF_FIELDS = [
 
 
 def empty_apartments(spark) -> DataFrame:
-    return spark.createDataFrame([], APARTMENTS_DDL)
+    return local_df(spark, [], APARTMENTS_DDL)
 
 
 def merge_apartments(

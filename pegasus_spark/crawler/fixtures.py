@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from pegasus_spark.crawler.codec import encode_image, phash64, synth_image
+from pegasus_spark.session import local_df
 
 SEED = 42
 HOSTS = ["h0.lianjia.test", "h1.lianjia.test", "h2.lianjia.test", "h3.lianjia.test"]
@@ -340,7 +341,7 @@ def _structure_pages(spec: SiteSpec) -> list[tuple]:
 def gen_pages_df(spark: SparkSession, spec: SiteSpec, round_no: int = 1) -> DataFrame:
     """The full page store for one crawl round, listing-page bodies built
     distributed (one task per slice of (region, page) pairs)."""
-    struct_df = spark.createDataFrame(_structure_pages(spec), PAGE_SCHEMA)
+    struct_df = local_df(spark, _structure_pages(spec), PAGE_SCHEMA)
 
     pairs = [
         (r.abbr, r.host, p)
@@ -349,7 +350,7 @@ def gen_pages_df(spark: SparkSession, spec: SiteSpec, round_no: int = 1) -> Data
     ]
     if not pairs:
         return struct_df
-    pair_df = spark.createDataFrame(pairs, "abbr string, host string, page int")
+    pair_df = local_df(spark, pairs, "abbr string, host string, page int")
 
     def build(batches):
         for pdf in batches:
@@ -383,7 +384,7 @@ def gen_items_df(spark: SparkSession, spec: SiteSpec, round_no: int = 1) -> Data
                 if c["image_id"] not in seen:
                     seen.add(c["image_id"])
                     metas.append((c["image_id"], c["caption"]))
-    meta_df = spark.createDataFrame(metas, "image_id string, caption string")
+    meta_df = local_df(spark, metas, "image_id string, caption string")
 
     dims = list(spec.image_dims)
 
@@ -415,7 +416,7 @@ def budget_df(spark: SparkSession, spec: SiteSpec) -> DataFrame:
         ]
     )
     rows = [(h, spec.budget[h], 10, spec.robots[h]) for h in HOSTS]
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def write_fixture(spark: SparkSession, spec: SiteSpec, out_dir: str, round_no: int = 1) -> None:

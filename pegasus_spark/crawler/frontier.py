@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pegasus_spark.crawler.bloom import SHARD_SCHEMA, BloomShards
 from pegasus_spark.crawler.cdc import APARTMENTS_DDL
 from pegasus_spark.crawler.urlnorm import host_of, with_url_columns
+from pegasus_spark.session import local_df
 
 FRONTIER_DDL = (
     "url string, url_hash int, url_hash64 bigint, host string, kind string, "
@@ -578,8 +579,8 @@ class FrontierStore:
         if po is not None and pn is not None:
             changed = [k for k, v in pn.items() if po.get(k) != v]
             if not changed:
-                return self.spark.createDataFrame(
-                    [],
+                return local_df(
+                    self.spark, [],
                     "url string, host string, kind string, old_state string, "
                     "state string, change_type string",
                 )
@@ -590,7 +591,7 @@ class FrontierStore:
                     "url", F.col("state").alias("old_state")
                 )
             else:
-                old = self.spark.createDataFrame([], "url string, old_state string")
+                old = local_df(self.spark, [], "url string, old_state string")
         else:
             old = self.read_frontier(v_old).select(
                 "url", F.col("state").alias("old_state")

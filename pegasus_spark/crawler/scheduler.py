@@ -63,6 +63,13 @@ from pegasus_spark.crawler.parse import (
     total_page_col,
 )
 from pegasus_spark.crawler.urlnorm import with_url_columns
+from pegasus_spark.session import local_df
+
+# one row per crawl round in the store's `rounds` table
+ROUNDS_DDL = (
+    "round int, dequeued int, new_urls int, cards int, pending bigint, "
+    "fetched bigint, failed bigint, robots_blocked bigint, wall_s double"
+)
 
 # Stage-rank priority encoding: higher = earlier. Listing pages add
 # total_page so larger regions dispatch first (LPT, K1).
@@ -257,8 +264,8 @@ class CrawlScheduler:
         )
         restricted = {k: v for k, v in self.allowlist.items() if v}
         if restricted:
-            pairs = self.spark.createDataFrame(
-                [(dd, rr) for dd, rs in restricted.items() for rr in rs],
+            pairs = local_df(
+                self.spark, [(dd, rr) for dd, rs in restricted.items() for rr in rs],
                 "parent_abbr string, abbr string",
             )
             unrestricted = r.filter(~F.col("parent_abbr").isin(*restricted.keys()))
@@ -292,17 +299,20 @@ class CrawlScheduler:
 
     # -- bootstrap / resume --------------------------------------------------
 
-    def bootstrap(self) -> Checkpoint:
-        """Seed the frontier (round 0). Seeds default to nothing — callers
-        pass the root URL(s); reference analog: the hardcoded root link,
-        links.go:8-11."""
-        seeds = self.spark.createDataFrame(
-            [(u,) for u in self.seed_urls], "url string"
+    def _seeds_df(self) -> DataFrame:
+        return local_df(
+            self.spark, [(u,) for u in self.seed_urls], "url string"
         ).select(
             "url", F.lit("root").alias("kind"), F.lit(ROOT_P).alias("priority"),
             F.lit(0).alias("page"), F.lit(0).alias("depth"),
             F.lit(None).cast("string").alias("region"),
         )
+
+    def bootstrap(self) -> Checkpoint:
+        """Seed the frontier (round 0). Seeds default to nothing — callers
+        pass the root URL(s); reference analog: the hardcoded root link,
+        links.go:8-11."""
+        seeds = self._seeds_df()
         # materialize the (tiny) candidate build once — four independent
         # bootstrap writes consume it — then overlap them: sequential
         # first-touch jobs paid ~15 s of Python-worker spin-up + codegen
@@ -498,15 +508,14 @@ class CrawlScheduler:
                 state_totals[s] = state_totals.get(s, 0) + c
         self.store.append(
             "rounds",
-            self.spark.createDataFrame(
-                [(
+            local_df(
+                self.spark, [(
                     round_no, n_dq, n_new, n_cards,
                     state_totals.get("pending", 0), state_totals.get("fetched", 0),
                     state_totals.get("failed", 0), state_totals.get("robots_blocked", 0),
                     float(time.perf_counter() - t_round),
                 )],
-                "round int, dequeued int, new_urls int, cards int, pending bigint, "
-                "fetched bigint, failed bigint, robots_blocked bigint, wall_s double",
+                ROUNDS_DDL,
             ),
             round_no,
         )
@@ -685,9 +694,7 @@ class CrawlScheduler:
             ):
                 break
             # next dequeue over base ⊕ touched (broadcast-tiny overlay)
-            touched_df = self.spark.createDataFrame(
-                list(touched.values()), base_schema
-            )
+            touched_df = local_df(self.spark, touched.values(), base_schema)
             eff = base_frontier.join(
                 F.broadcast(touched_df.select("url")), "url", "left_anti"
             ).unionByName(touched_df)
@@ -765,7 +772,7 @@ class CrawlScheduler:
             fresh = [r for r, m in zip(rows, maybe) if not m]
             suspects = [r for r, m in zip(rows, maybe) if m]
             if suspects:
-                sdf = self.spark.createDataFrame(suspects, base_frontier.schema)
+                sdf = local_df(self.spark, suspects, base_frontier.schema)
                 seen = {
                     r["url"]
                     for r in base_frontier.select("url")
@@ -777,9 +784,7 @@ class CrawlScheduler:
         # overflow: exact, distributed, nothing row-shaped on the driver
         new_df = cand.join(base_frontier.select("url"), "url", "left_anti")
         if touched:
-            tdf = self.spark.createDataFrame(
-                [(u,) for u in touched], "url string"
-            )
+            tdf = local_df(self.spark, [(u,) for u in touched], "url string")
             new_df = new_df.join(F.broadcast(tdf), "url", "left_anti")
         return None, new_df.localCheckpoint(eager=True)
 
@@ -797,7 +802,7 @@ class CrawlScheduler:
         in the delta and the bloom build without ever landing on the
         driver."""
         dirty_buckets = {host_bucket_py(h) for h in dirty_hosts}
-        touched_df = self.spark.createDataFrame(list(touched.values()), base_schema)
+        touched_df = local_df(self.spark, touched.values(), base_schema)
         if extra_new_df is not None:
             touched_df = touched_df.unionByName(extra_new_df.select(*touched_df.columns))
         old_dirty = self.store.read_frontier_buckets(
@@ -814,10 +819,6 @@ class CrawlScheduler:
             .localCheckpoint(eager=True)
         )
         bloom_versions = list(ckpt.bloom_versions)
-        rounds_schema = (
-            "round int, dequeued int, new_urls int, cards int, pending bigint, "
-            "fetched bigint, failed bigint, robots_blocked bigint, wall_s double"
-        )
         with ThreadPoolExecutor(max_workers=5) as ex:
             futs = [
                 ex.submit(
@@ -829,7 +830,7 @@ class CrawlScheduler:
                 bloom_versions.append(last_round)
                 new_df = None
                 if new_rows_all:
-                    new_df = self.spark.createDataFrame(new_rows_all, base_schema)
+                    new_df = local_df(self.spark, new_rows_all, base_schema)
                 if extra_new_df is not None:
                     extra = extra_new_df.select(
                         *(new_df.columns if new_df is not None else base_schema.fieldNames())
@@ -845,7 +846,7 @@ class CrawlScheduler:
                 futs.append(
                     ex.submit(
                         self.store.append, "rounds",
-                        self.spark.createDataFrame([row], rounds_schema), row[0],
+                        local_df(self.spark, [row], ROUNDS_DDL), row[0],
                     )
                 )
             lin_rows = delta.groupBy(
@@ -1100,7 +1101,7 @@ class CrawlScheduler:
         else:
             shard_rows = self.bloom.build(new_rows, version=round_no).collect()
             self.store.write_bloom(
-                self.spark.createDataFrame(shard_rows, SHARD_SCHEMA), round_no
+                local_df(self.spark, shard_rows, SHARD_SCHEMA), round_no
             )
             if self._bloom_arrays is not None:
                 self._bloom_absorb(shard_rows, round_no, bloom_versions)
@@ -1178,8 +1179,8 @@ class CrawlScheduler:
         )]
         self.store.append(
             "crawl_runs",
-            self.spark.createDataFrame(
-                row, "start bigint, end bigint, log string, result string"
+            local_df(
+                self.spark, row, "start bigint, end bigint, log string, result string"
             ),
             ckpt.round,
         )
@@ -1198,13 +1199,7 @@ class CrawlScheduler:
         self.page_store_path = page_store_path
         self.now_ts = int(now_ts)
         base = ckpt.round + 1
-        seeds = self.spark.createDataFrame(
-            [(u,) for u in self.seed_urls], "url string"
-        ).select(
-            "url", F.lit("root").alias("kind"), F.lit(ROOT_P).alias("priority"),
-            F.lit(0).alias("page"), F.lit(0).alias("depth"),
-            F.lit(None).cast("string").alias("region"),
-        )
+        seeds = self._seeds_df()
         cand = prepare_candidates(seeds, self.budget, round_no=base)
         self.store.write_frontier(cand, base, self.n_partitions)
         self.store.write_bloom(self.bloom.build(cand, version=base), base)

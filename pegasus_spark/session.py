@@ -41,12 +41,58 @@ builder.
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # spark.sql.codegen.cache.maxEntries: holds the classes of a whole crawl
 # (~340) or analytics pass (~230); see the module docstring
 CODEGEN_CACHE_ENTRIES = 512
+
+
+def local_df(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held rows, planned as a JVM-local relation.
+
+    ``rows`` are positional (tuples, or ``Row``s from ``collect()``) in the
+    order of ``schema``'s fields; ``schema`` is a ``StructType`` or a DDL
+    string. Names, types and nullability are ``schema``'s, exactly as
+    ``spark.createDataFrame(list, schema)`` would give them.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a Python
+    RDD (``Scan ExistingRDD``), so every scan of the frame, however small,
+    starts a Python-worker task to re-pickle them. The crawler scans such
+    frames in every round (the politeness budget in each dequeue and
+    candidate build, the micro-batch overlay, ``rounds`` rows). Here the
+    rows go to the JVM once as a pyarrow table with the schema's Arrow
+    types, and Spark plans them as ``LocalTableScan``, with no Python job.
+    Measured on a 4-core VM at ``local[2]``:
+
+    - A broadcast join against the budget took 520-800 ms as a Python RDD,
+      170-265 ms as a local relation.
+    - The benchmark's crawl (``perfbench``, 10 seeds): median timed pass
+      36.5 -> 28.3 s; scheduler executor CPU 23.5 -> 13.0 s and frontier
+      wall 16.4 -> 11.0 s in traced runs, with the same jobs per layer.
+    - 100k frontier rows (the micro-batch overlay's cap): building the frame
+      1.47 -> 0.53 s; a broadcast anti-join and full-row aggregate over it
+      1.45 -> 1.62 s.
+    - The first Arrow conversion in a JVM costs about 0.6 s once.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

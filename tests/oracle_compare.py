@@ -20,6 +20,14 @@ TABLES = [
 ]
 
 
+def wide_int_columns(rel) -> list[str]:
+    """DuckDB result columns typed HUGEINT or UHUGEINT. The driver reads
+    oracle results through pandas, which turns these into float64, while
+    Spark gives int64 for the same integer math, so the driver's compare
+    fails on them even when every value agrees."""
+    return [c for c, t in zip(rel.columns, rel.types) if "HUGEINT" in str(t)]
+
+
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
@@ -59,6 +67,9 @@ def compare(spark_df, con, sql: str) -> tuple[bool, str]:
     s_rows = spark_df.collect()
     s_cols = spark_df.columns
     rel = con.sql(sql)
+    huge = wide_int_columns(rel)
+    if huge:
+        return False, f"DuckDB HUGEINT columns {huge}: CAST them to BIGINT"
     d_cols = rel.columns
     d_rows = rel.fetchall()
 

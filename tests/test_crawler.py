@@ -4,6 +4,9 @@ politeness + robots properties, payload per-row invariant."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -14,6 +17,7 @@ from crawl_oracle import (
     expected_fetched_set,
     expected_url_set,
 )
+from pegasus_spark.crawler.cdc import empty_apartments
 from pegasus_spark.crawler.codec import decode_image, psnr, synth_image
 from pegasus_spark.crawler.fixtures import budget_df, make_site_spec, write_fixture
 from pegasus_spark.crawler.scheduler import CrawlScheduler
@@ -264,6 +268,60 @@ def test_store_reads_submit_no_spark_jobs(crawl, spark):
         got = [(f.name, f.dataType) for f in df.schema]
         exp = [(f.name, f.dataType) for f in want[name]]
         assert got == exp, f"{name}: read schema {got} != written {exp}"
+
+
+CRAWLER_DIR = Path(__file__).resolve().parent.parent / "pegasus_spark" / "crawler"
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("microbatch_threshold", [0, 256], ids=["per_round", "microbatch"])
+def test_driver_rows_plan_as_local_relations(crawl, spark, tmp_path, microbatch_threshold):
+    """Frames the crawler builds from driver-held rows are JVM-local
+    relations: a Python RDD (`Scan ExistingRDD`) would start a Python-worker
+    task on every scan. Checked on the budget, the empty apartments table
+    and the `rounds` rows each commit path appends."""
+    spec, sched0, _, _ = crawl
+    frames = {"budget": budget_df(spark, spec), "empty_apartments": empty_apartments(spark)}
+    sched = CrawlScheduler(
+        spark, str(tmp_path),
+        page_store_path=sched0.page_store_path,
+        image_store_path=sched0.image_store_path,
+        budget=frames["budget"],
+        seed_urls=[spec.root_url],
+        now_ts=TS1,
+        microbatch_threshold=microbatch_threshold,
+    )
+    append = sched.store.append
+
+    def capture(name, df, round_no):
+        frames.setdefault(name, df)
+        append(name, df, round_no)
+
+    sched.store.append = capture
+    sched.run(max_rounds=1)
+    assert "rounds" in frames
+    for name in ("budget", "empty_apartments", "rounds"):
+        plan = _executed_plan(frames[name])
+        assert "ExistingRDD" not in plan, f"{name} scans a Python RDD:\n{plan}"
+
+
+def test_crawler_builds_no_python_rdd_frames():
+    """No call to `createDataFrame` under pegasus_spark/crawler/: rows held on
+    the driver go through `session.local_df`, so a new call site cannot bring
+    the per-scan Python job back."""
+    calls = []
+    for path in sorted(CRAWLER_DIR.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                calls.append(f"{path.name}:{node.lineno}")
+    assert calls == []
 
 
 def test_partitioned_bloom_path_end_to_end(spark, tmp_path_factory):

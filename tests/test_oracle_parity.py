@@ -3,10 +3,11 @@ gate the driver runs (CORRECTNESS_r{N}.json)."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from tests.conftest import SF_SMOKE_DIR
-from tests.oracle_compare import compare, duckdb_conn
+from tests.oracle_compare import compare, duckdb_conn, wide_int_columns
 
 import __spark_entry__ as entrymod
 
@@ -40,19 +41,28 @@ def test_entry_smoke(spark):
 
 
 # `SUM(bigint) * 1000 // ...` is HUGEINT in DuckDB. Read through pandas it
-# becomes float64 while Spark's DIV gives int64, so these oracles CAST their
-# ratio columns to BIGINT.
-MILLI_RATIO_ORACLES = [
-    "daily_volume_ma7", "image_dedup_savings", "session_abandonment", "user_concentration",
-]
+# becomes float64 while Spark's DIV gives int64, so no oracle may return one;
+# binding each oracle at sf0.001 gives its output types without running it.
+@pytest.fixture(scope="module")
+def smoke_con():
+    c = duckdb_conn(SF_SMOKE_DIR)
+    yield c
+    c.close()
 
 
-@pytest.mark.parametrize("name", MILLI_RATIO_ORACLES)
-def test_oracle_outputs_no_hugeint(name):
-    con = duckdb_conn(SF_SMOKE_DIR)
+@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
+def test_oracle_outputs_no_hugeint(name, smoke_con):
+    huge = wide_int_columns(smoke_con.sql(entrymod.oracle_sql()[name]))
+    assert not huge, f"{name}: HUGEINT columns {huge}"
+
+
+def test_compare_rejects_hugeint(spark):
+    con = duckdb.connect()
     try:
-        rel = con.sql(entrymod.oracle_sql()[name])
-        huge = [c for c, t in zip(rel.columns, rel.types) if str(t) == "HUGEINT"]
+        ok, msg = compare(
+            spark.range(1).selectExpr("id AS n", "id * 1000 AS ratio_milli"),
+            con, "SELECT 0::BIGINT AS n, SUM(0::BIGINT) * 1000 AS ratio_milli",
+        )
     finally:
         con.close()
-    assert not huge, f"{name}: HUGEINT columns {huge}"
+    assert not ok and "ratio_milli" in msg and "'n'" not in msg, msg
