@@ -38,10 +38,19 @@ from pegasus_spark.crawler.fixtures import SCALES
 
 
 def _fixture_dir(scale: str) -> str:
-    import zlib
+    """Cache directory of one scale's fixture. Its name carries a digest of
+    the scale's parameters and of the generator's source, so a fixture
+    written by an older ``crawler/fixtures.py`` is never reused."""
+    import hashlib
 
-    tag = zlib.crc32(json.dumps(SCALES[scale], sort_keys=True).encode()) & 0xFFFFFF
-    return os.path.join(tempfile.gettempdir(), f"pegasus_spark_bench_fx_{scale}_{tag:06x}")
+    from pegasus_spark.crawler import fixtures
+
+    h = hashlib.sha256(json.dumps(SCALES[scale], sort_keys=True).encode())
+    with open(fixtures.__file__, "rb") as f:
+        h.update(f.read())
+    return os.path.join(
+        tempfile.gettempdir(), f"pegasus_spark_bench_fx_{scale}_{h.hexdigest()[:12]}"
+    )
 
 
 def build_bench_fixture(spark: SparkSession, scale: str = "small") -> tuple:

@@ -934,8 +934,11 @@ def _cross_modal_cluster_df(spark, sf_dir):
     the same cluster. Embedding ids map 1:1 onto doc ids in the synthetic
     tables; edges are semi-joined to the document vertex set so foreign ids
     cannot enter the graph. Scale shape: each evidence source is already a
-    bucketed equality join; the union adds no new shuffle class, and the CC
-    machinery is the proven min-label-propagation + pointer-jumping loop.
+    bucketed equality join; the union adds no new shuffle class. The CC is
+    D.near_dup_clusters, which switches on the pair count: up to
+    D.LOCAL_CC_MAX_EDGES pairs it runs union-find on the driver (sf0.01:
+    1,726 pairs, 7 jobs and 0.6 s instead of the loop's 39 jobs and 3.5 s),
+    above it the min-label-propagation + pointer-jumping loop.
     The result is deterministic, so the materialized assignment is memoized
     per (session, sf_dir, input mtimes) and reused by every downstream
     consumer — the mtime component invalidates the memo if the backing
@@ -3905,8 +3908,9 @@ def q_phash_near_dup(spark, sf_dir):
 def _phash_cluster_df(spark, sf_dir):
     """Shared by q_phash_clusters / q_phash_keepers: connected components
     over the phash near-dup pair graph (the same D.near_dup_clusters
-    machinery the text side uses — min-label propagation + pointer
-    jumping, pairs from the chunk-equality join, never all-pairs)."""
+    machinery the text side uses — driver union-find for a small pair
+    graph, min-label propagation + pointer jumping above it; pairs from the
+    chunk-equality join, never all-pairs)."""
     ph = _phash_df(spark, sf_dir)
     pairs = D.hamming_near_dups(
         ph, hash_col="phash", max_hamming=3, chunks=4,

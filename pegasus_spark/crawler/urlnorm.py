@@ -34,14 +34,17 @@ _DEFAULT_PORTS = {"http": "80", "https": "443"}
 def canonicalize_str(url: str) -> str:
     """RFC 3986 §6 normalization: lowercase scheme/host, strip default port,
     resolve dot-segments, drop fragment, sort query params, keep trailing
-    slash semantics."""
+    slash semantics. A URL that does not parse (a non-numeric or
+    out-of-range port among them) is returned unchanged."""
     try:
         parts = urlsplit(url.strip())
+        port = parts.port
     except ValueError:
         return url
     scheme = parts.scheme.lower()
     host = parts.hostname.lower() if parts.hostname else ""
-    port = parts.port
+    if ":" in host:  # IPv6 literal: urlsplit drops its brackets
+        host = f"[{host}]"
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
         netloc = f"{host}:{port}"

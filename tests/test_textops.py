@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pegasus_spark.textops.dedup import (
     exact_dedupe,
@@ -362,6 +364,62 @@ class TestNearDupClusters:
         # 1,2,5 exact dups (+3,6 near dups chained in) share keeper 1; 4 alone
         assert got[1] == got[2] == got[5] == 1
         assert got[4] == 4
+
+
+    @staticmethod
+    def _clusters(docs, pairs, max_edges):
+        from unittest import mock
+
+        from pegasus_spark.textops import dedup
+
+        with mock.patch.object(dedup, "LOCAL_CC_MAX_EDGES", max_edges):
+            out = dedup.near_dup_clusters(docs, pairs)
+            return out.schema, sorted(map(tuple, out.collect()))
+
+    @settings(max_examples=15, deadline=None)
+    @given(
+        ids=st.lists(st.integers(0, 30), max_size=25),
+        edges=st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=30),
+        chain=st.integers(0, 25),
+    )
+    def test_local_form_equals_loop(self, spark, ids, edges, chain):
+        """The driver union-find gives the loop's rows on random graphs:
+        duplicate, reversed and self-loop edges, endpoints outside ``df``
+        (ids 31-40 and the chain's tail), repeated ids in ``df``, a chain
+        long enough for several loop rounds, and no edges at all."""
+        edges = edges + [(e[1], e[0]) for e in edges[:5]]  # reversed copies
+        edges += [(100 + i, 101 + i) for i in range(chain)]  # descending chain
+        ids = ids + [100 + i for i in range(0, chain, 2)] + ids[:3]
+        docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        local = self._clusters(docs, pairs, 10**9)
+        loop = self._clusters(docs, pairs, -1)
+        assert local == loop
+
+    def test_small_graph_skips_the_loop(self, spark, monkeypatch):
+        """A small graph runs a bounded number of Spark jobs and never enters
+        the label-propagation loop, whose rounds cost several jobs each."""
+        from pegasus_spark.textops import dedup
+
+        def loop(*_a, **_k):
+            raise AssertionError("small graph entered the propagation loop")
+
+        monkeypatch.setattr(dedup, "_propagate_labels", loop)
+        docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+        )
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup())
+        out = dedup.near_dup_clusters(docs, pairs).collect()
+        jobs = set(tracker.getJobIdsForGroup()) - before
+        assert {r["doc_id"]: r["cluster_id"] for r in out} == {
+            i: 0 if i <= 30 else i for i in range(40)
+        }
+        # 7-9 jobs: pair checkpoint, count, edge collect, result collect
+        # (AQE adds a job per shuffle or broadcast). The loop runs 6-7 jobs
+        # per round and at least two rounds.
+        assert len(jobs) <= 12, f"{len(jobs)} Spark jobs for a 30-edge graph"
 
 
 class TestCurateCorpus:

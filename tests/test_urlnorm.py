@@ -47,3 +47,21 @@ def test_empty_path():
 
 def test_trailing_slash_significant():
     assert canonicalize_str("https://a.test/x") != canonicalize_str("https://a.test/x/")
+
+
+@pytest.mark.parametrize(
+    "url", ["http://a.test:abc/x", "http://a.test:65536/x", "http://a.test:-1/x"]
+)
+def test_bad_port_returned_unchanged(url):
+    assert canonicalize_str(url) == url
+
+
+@pytest.mark.parametrize(
+    "url, want",
+    [
+        ("http://[::1]:8080/", "http://[::1]:8080/"),
+        ("HTTP://[2001:DB8::1]:80/a/../b", "http://[2001:db8::1]/b"),
+    ],
+)
+def test_ipv6_host_keeps_brackets(url, want):
+    assert canonicalize_str(url) == want
