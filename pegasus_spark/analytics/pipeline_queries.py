@@ -1658,8 +1658,8 @@ def q_index_dedup(spark, sf_dir):
     today's batch — new docs whose minhash LSH-collides with the index and
     agrees on ≥ 4 of 8 positions flag as already-ingested near-dups. The
     band match is a SHUFFLE join (the index is corpus-scale; broadcast is
-    the eval-suite case, fuzzy_decontaminate), both sides minhashed once
-    via keep_sig."""
+    the eval-suite case, fuzzy_decontaminate), both sides minhashed once,
+    their signatures riding the band join."""
     docs = _docs(spark, sf_dir)
     return D.minhash_index_dedup(
         docs.filter(F.col("doc_id") % 3 != 0),

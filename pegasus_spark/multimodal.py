@@ -321,46 +321,27 @@ def image_decontaminate(
     which exact byte dedup misses) can't leak into a training corpus.
 
     Same pigeonhole contract as ``hamming_near_dups``: exhaustive iff
-    max_hamming ≤ chunks − 1.  Scale shape mirrors text decontaminate — the
-    EVAL side is small (a benchmark, not a corpus) so its chunk table
-    BROADCASTS; the corpus side explodes into ``chunks`` bit-slices and
-    probes the broadcast map-side, candidates verify with one exact
-    bit_count(xor), and the contaminated-id set (eval-sized, tiny) joins
-    back as a flag.  The corpus shuffles only its (id, hash) rows for the
-    final flag join — image bytes and captions never move."""
+    max_hamming ≤ chunks − 1.  The EVAL side is small (a benchmark, not a
+    corpus), so its hashes broadcast into the chunk probe (the probe form
+    of ``operators.bucket_pairs``, the eval hash standing in as its id),
+    and the contaminated-id set joins back as a flag.  Image bytes and
+    captions never move."""
     import pyspark.sql.functions as F
 
+    from pegasus_spark.operators import bucket_pairs
+    from pegasus_spark.textops.dedup import chunk_keys, hamming
+
     base = df.select(id_col, hash_col).localCheckpoint(eager=True)
-    width = n_bits // chunks
-
-    def _slices(col: str):
-        return F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("c"),
-                        F.shiftrightunsigned(col, c * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("cv"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("e")
-
-    corpus = base.select(id_col, hash_col, _slices(hash_col)).select(
-        id_col, hash_col, "e.c", "e.cv"
-    )
-    evals = (
-        eval_df.select(F.col(eval_hash_col).alias("_eh"), _slices(eval_hash_col))
-        .select("_eh", "e.c", "e.cv")
+    evals = eval_df.select(
+        F.col(eval_hash_col).alias(id_col), F.col(eval_hash_col).alias(hash_col)
     )
     hit_ids = (
-        corpus.join(F.broadcast(evals), ["c", "cv"])
-        .filter(
-            F.bit_count(F.col(hash_col).bitwiseXOR(F.col("_eh"))) <= max_hamming
+        bucket_pairs(
+            base, id_col, chunk_keys(hash_col, n_bits, chunks), [hash_col],
+            hamming(hash_col), F.col("hamming") <= max_hamming,
+            right=F.broadcast(evals),
         )
-        .select(id_col)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )

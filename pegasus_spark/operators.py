@@ -14,12 +14,16 @@ left rows at equal ts, giving inclusive <= semantics that match DuckDB's
 native `ASOF JOIN ... ON l.ts >= r.ts` — then keep the left rows. One
 shuffle on the keys; no per-key cross product, no driver loops. At 100 TB
 this is the standard scalable as-of shape (a range join would be quadratic
-per key)."""
+per key).
+
+bucket_pairs: the candidate-then-verify similarity join — explode bucket
+keys, equality-join, verify each candidate pair — behind every near-dup
+family in textops and multimodal."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 
 def asof_join(
@@ -129,6 +133,62 @@ def range_join_binned(
         .filter(F.col(right_on).between(F.col(left_on) + F.lit(lo), F.col(left_on) + F.lit(hi)))
         .drop("_bin")
     )
+
+
+def bucket_pairs(
+    left: DataFrame,
+    id_col: str,
+    key: Column,
+    payload: list[str],
+    verify: Column,
+    keep: Column,
+    right: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate-then-verify pair search: every near-dup family (minhash
+    bands, Hamming chunks, sign-LSH buckets, k-means cells) is this one
+    shape. Rows sharing a value of ``key`` are equality-joined, so the
+    shuffle key is the bucket and no all-pairs comparison ever runs; each
+    candidate is then scored by ``verify`` and kept where ``keep`` holds.
+
+    - ``key`` is evaluated on each side. A scalar key is one bucket per
+      row. An ARRAY key (several buckets per row: LSH bands, pigeonhole
+      chunks) is exploded first; a pair sharing several buckets meets once
+      per shared bucket, so the result is deduped, after the payload is
+      dropped. A scalar key gets neither the explode nor the dedupe.
+    - ``payload`` columns ride the join as ``<col>_a`` / ``<col>_b`` so
+      ``verify`` (a named score, e.g. ``sig_matches``) and ``keep`` (a
+      predicate on it) run inside the join, without a join back to the
+      input by id and hence without recomputing its lineage. Only ids,
+      payload and the key move; wide row content never does.
+    - Self form (``right=None``): pairs of ``left`` with ``id_a < id_b``,
+      each pair once. Probe form: ``id_a`` from ``left``, ``id_b`` from
+      ``right``, which must carry ``id_col`` and the payload columns. A
+      caller whose probe side is small (an eval suite) passes
+      ``F.broadcast(right)``; the hint survives the explode, so the
+      corpus side never shuffles for the probe.
+
+    Output: (id_a, id_b, <verify>). Hot buckets are the skew axis, which
+    AQE's skew-join split handles because this is a plain shuffle join."""
+    from pyspark.sql.types import ArrayType
+
+    multi = isinstance(left.select(key).schema[0].dataType, ArrayType)
+    # explode the expression itself: exploding a projected key column makes
+    # the optimizer add a size(key) > 0 filter that computes the key twice
+    k = (F.explode(key) if multi else key).alias("_k")
+
+    def side(df, suffix):
+        return df.select(
+            F.col(id_col).alias(f"id_{suffix}"),
+            *[F.col(c).alias(f"{c}_{suffix}") for c in payload],
+            k,
+        )
+
+    a, b = side(left, "a"), side(left if right is None else right, "b")
+    pairs = a.join(b, "_k")
+    if right is None:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    pairs = pairs.select("id_a", "id_b", verify).filter(keep)
+    return pairs.distinct() if multi else pairs
 
 
 def range_prefix_max(frozen: DataFrame, value_col: str, floor_value: int = -1):

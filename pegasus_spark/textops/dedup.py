@@ -23,6 +23,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from pegasus_spark.operators import bucket_pairs
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -97,74 +99,44 @@ def minhash_signatures(
     )
 
 
-def banded_sigs(
-    sig_df: DataFrame, bands: int = 4, rows: int = 2, id_col: str = "doc_id",
-    keep_sig: bool = False,
-) -> DataFrame:
-    """Explode a minhash signature into its (band, band_hash) keys — the LSH
-    bucketing step shared by pair search (`lsh_candidate_pairs`) and the
-    eval-probe decontamination (`minhash_decontaminate`). ``keep_sig``
-    carries the full signature on each banded row (64 hex bytes × bands) so
-    a downstream verify can run without re-joining — and therefore without
-    re-COMPUTING — the signature subtree."""
-    keep = [id_col, "sig"] if keep_sig else [id_col]
-    return sig_df.select(
-        *keep,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws("|", F.slice(F.col("sig"), b * rows + 1, rows))
-                    ).alias("bh"),
-                ),
+def band_keys(bands: int = 4, rows: int = 2, sig_col: str = "sig"):
+    """The LSH bucket keys of a minhash signature: one (band, md5 of the
+    band's ``rows`` values) struct per band, as an array column for
+    ``operators.bucket_pairs``. Unrolled per band rather than a
+    ``transform`` lambda, which Spark would interpret per element."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat_ws("|", F.slice(F.col(sig_col), b * rows + 1, rows))
+                ).alias("bh"),
             )
-        ).alias("e"),
-    ).select(*keep, "e.band", "e.bh")
-
-
-def lsh_candidate_pairs(
-    sig_df: DataFrame, bands: int = 4, rows: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """Band the signature (bands × rows), bucket-join on (band, band_hash) —
-    the shingle→minhash→band→bucket-join pipeline. Returns candidate pairs
-    (id_a < id_b). Shuffle key = band hash ⇒ no all-pairs comparison."""
-    banded = banded_sigs(sig_df, bands, rows, id_col)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+            for b in range(bands)
+        ]
     )
+
+
+def _sig_matches():
+    """Signature positions on which the two sides of a bucket_pairs join
+    agree: the verify score of every minhash operator."""
+    return F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    ).alias("sig_matches")
 
 
 def minhash_near_dups(
     df: DataFrame, n_hashes: int = 8, k: int = 5, bands: int = 4, rows: int = 2,
     min_sig_match: int = 4, id_col: str = "doc_id",
 ) -> DataFrame:
-    """Full pipeline: signatures → LSH candidates → verify by signature
+    """Full pipeline: signatures → LSH band join → verify by signature
     agreement (≥ min_sig_match of n_hashes positions equal — an unbiased
-    Jaccard estimate). Returns (id_a, id_b, sig_matches)."""
+    Jaccard estimate), the signature riding the band join. Returns
+    (id_a, id_b, sig_matches)."""
     sigs = minhash_signatures(df, n_hashes, k, id_col=id_col)
-    pairs = lsh_candidate_pairs(sigs, bands, rows, id_col=id_col)
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    return (
-        pairs.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "sig_matches",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ),
-        )
-        .filter(F.col("sig_matches") >= min_sig_match)
-        .select("id_a", "id_b", "sig_matches")
+    return bucket_pairs(
+        sigs, id_col, band_keys(bands, rows), ["sig"],
+        _sig_matches(), F.col("sig_matches") >= min_sig_match,
     )
 
 
@@ -204,22 +176,23 @@ def minhash_accuracy(
     form moves each pair's two ~0.5 KB arrays once and intersects
     locally (values identical). Verify exchanges are O(|pairs| · doc
     bytes) regardless of corpus size in the sort-merge form; when the
-    participant set is small enough to broadcast (≤ 32768 ids — ~130 MB
-    at ~4 KB of shingle array per 300-char doc, well under the 8 GB
-    broadcast hard limit), the pair table never shuffles AT ALL: both
-    array joins become broadcast-hash and the 775k sf0.1 pairs stop
-    dragging two ~5 KB arrays through two sort-merge exchanges (measured
-    11.2 → 5.4 s for the t≥1 verify). The participant count is one tiny
-    job over the already-checkpointed pair table — the same physical
-    size-switch pattern as the scheduler's bloom probe and
-    _global_disc_rank."""
+    participant set is small enough to broadcast (≤
+    ``ACCURACY_BROADCAST_MAX_IDS`` ids — ~130 MB at ~4 KB of shingle array
+    per 300-char doc, well under the 8 GB broadcast hard limit), the pair
+    table never shuffles AT ALL: both array joins become broadcast-hash
+    and the 775k sf0.1 pairs stop dragging two ~5 KB arrays through two
+    sort-merge exchanges (measured 11.2 → 5.4 s for the t≥1 verify). The
+    participant count is one tiny job over the already-checkpointed pair
+    table — the same physical size-switch pattern as the scheduler's bloom
+    probe and _global_disc_rank."""
     pairs = minhash_near_dups(
         df, n_hashes, k, bands, rows, min_sig_match, id_col
     ).localCheckpoint(eager=True)  # LSH-bounded rows; stops subtree re-runs
     ids = pairs.select(
         F.explode(F.array("id_a", "id_b")).alias(id_col)
     ).distinct()
-    broadcast_arrays = ids.count() <= 32768  # checkpointed input: cheap job
+    # checkpointed input: a cheap job
+    broadcast_arrays = ids.count() <= ACCURACY_BROADCAST_MAX_IDS
     src = df.join(F.broadcast(ids), id_col).select(
         id_col, F.trim(F.col(text_col)).alias("_t")
     )
@@ -281,44 +254,20 @@ def minhash_decontaminate(
     `decontaminate` operator, which a paraphrased or lightly-edited eval
     leak slips past.
 
-    Scale shape: the eval suite is tiny relative to the corpus, so its
-    banded signature set and its full signatures both BROADCAST; the corpus
-    side computes signatures ONCE (one partial-aggregated row per doc — text
-    never moves) and carries the 64-byte signature through the band probe
-    (keep_sig), so the verify step needs no join back to — and hence no
-    recompute of — the expensive corpus minhash subtree; the only exchange
-    past the signature aggregate is the candidate-set distinct, whose rows
-    are the (rare) probe hits. No corpus self-join anywhere. Output: one row
-    per contaminated corpus doc — how many distinct eval docs it matched and
-    the strongest signature agreement.
-    """
+    The eval suite is tiny relative to the corpus, so its signatures
+    broadcast into the band probe (``bucket_pairs``' probe form) and no
+    corpus self-join runs. Output: one row per contaminated corpus doc —
+    how many distinct eval docs it matched and the strongest signature
+    agreement."""
     sig_c = minhash_signatures(corpus_df, n_hashes, k, id_col=id_col)
     sig_e = minhash_signatures(eval_df, n_hashes, k, id_col=id_col)
-    bands_c = banded_sigs(sig_c, bands, rows, id_col, keep_sig=True)
-    bands_e = banded_sigs(sig_e, bands, rows, id_col).select(
-        F.col(id_col).alias("eval_id"), "band", "bh"
+    ver = bucket_pairs(
+        sig_c, id_col, band_keys(bands, rows), ["sig"],
+        _sig_matches(), F.col("sig_matches") >= min_sig_match,
+        right=F.broadcast(sig_e),
     )
-    cand = (
-        bands_c.join(F.broadcast(bands_e), ["band", "bh"])
-        .select(id_col, "sig", "eval_id")
-        .distinct()
-    )
-    se = sig_e.select(F.col(id_col).alias("eval_id"), F.col("sig").alias("sig_e"))
-    ver = (
-        cand.join(F.broadcast(se), "eval_id")
-        .withColumn(
-            "sig_matches",
-            F.size(
-                F.filter(
-                    F.zip_with("sig", "sig_e", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ),
-        )
-        .filter(F.col("sig_matches") >= min_sig_match)
-    )
-    return ver.groupBy(id_col).agg(
-        F.countDistinct("eval_id").cast("bigint").alias("n_eval_matches"),
+    return ver.groupBy(F.col("id_a").alias(id_col)).agg(
+        F.countDistinct("id_b").cast("bigint").alias("n_eval_matches"),
         F.max("sig_matches").cast("bigint").alias("max_sig_matches"),
     )
 
@@ -332,42 +281,26 @@ def minhash_index_dedup(
     duplicate anything already in a committed corpus INDEX — the
     daily-crawl pattern (dedup today's batch against the 100 TB corpus
     without re-clustering it). The structural sibling of
-    `minhash_decontaminate` at the opposite cardinality: there the probe
-    side (an eval suite) is tiny and BROADCASTS; here the index side is
-    corpus-scale, so the band match is a SHUFFLE equality join on
-    (band, band_hash) — the key is content-hash-distributed, AQE
-    skew-splits hot boilerplate bands, and in production the index
-    signatures are a write-once store table built when each batch commits
-    (this function recomputes them from text only because the gate has no
-    store).
-
-    Both sides carry their signature through the band explode (keep_sig),
-    so each corpus is minhashed exactly ONCE and the verify step needs no
-    join back into either signature subtree. Output: one row per flagged
+    `minhash_decontaminate` at the opposite cardinality: the index side is
+    corpus-scale, so the band probe is a SHUFFLE equality join rather than
+    a broadcast. In production the index signatures are a write-once store
+    table built when each batch commits (this function recomputes them from
+    text only because the gate has no store). Output: one row per flagged
     batch doc — distinct index docs matched and the strongest agreement."""
     sig_b = minhash_signatures(batch_df, n_hashes, k, id_col=id_col)
     sig_i = minhash_signatures(index_df, n_hashes, k, id_col=id_col)
-    bands_b = banded_sigs(sig_b, bands, rows, id_col, keep_sig=True)
-    bands_i = banded_sigs(sig_i, bands, rows, id_col, keep_sig=True).select(
-        F.col(id_col).alias("index_id"), F.col("sig").alias("sig_i"), "band", "bh"
+    ver = bucket_pairs(
+        sig_b, id_col, band_keys(bands, rows), ["sig"],
+        _sig_matches(), F.col("sig_matches") >= min_sig_match, right=sig_i,
     )
-    cand = (
-        bands_b.join(bands_i, ["band", "bh"])
-        .select(id_col, "sig", "index_id", "sig_i")
-        .distinct()
-    )
-    ver = cand.withColumn(
-        "sig_matches",
-        F.size(
-            F.filter(F.zip_with("sig", "sig_i", lambda x, y: x == y), lambda m: m)
-        ),
-    ).filter(F.col("sig_matches") >= min_sig_match)
-    return ver.groupBy(id_col).agg(
-        F.countDistinct("index_id").cast("bigint").alias("n_index_matches"),
+    return ver.groupBy(F.col("id_a").alias(id_col)).agg(
+        F.countDistinct("id_b").cast("bigint").alias("n_index_matches"),
         F.max("sig_matches").cast("bigint").alias("max_sig_matches"),
     )
 
 
+# participant ids up to which minhash_accuracy broadcasts the shingle arrays
+ACCURACY_BROADCAST_MAX_IDS = 32_768
 LOCAL_CC_MAX_EDGES = 200_000  # pair rows up to which CC runs on the driver
 
 
@@ -722,21 +655,46 @@ def simhash_near_dups(
     )
 
 
+def chunk_keys(hash_col: str, n_bits: int = 64, chunks: int = 4):
+    """The pigeonhole bucket keys of an n-bit hash: one (chunk index, chunk
+    value) struct per equal bit-slice, as an array column for
+    ``operators.bucket_pairs``. Unsigned shifts, so full-width signed 64-bit
+    hashes (e.g. the image phash, whose top bit may be set) chunk
+    correctly; for non-negative hashes this is bit-identical to the
+    arithmetic shift the SQL oracles use."""
+    width = n_bits // chunks
+    return F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("c"),
+                F.shiftrightunsigned(hash_col, c * width)
+                .bitwiseAND(F.lit((1 << width) - 1))
+                .alias("cv"),
+            )
+            for c in range(chunks)
+        ]
+    )
+
+
+def hamming(hash_col: str):
+    """Bit distance between the two sides' ``hash_col`` in a bucket_pairs
+    join: the exact verify of every Hamming-ball search."""
+    return F.bit_count(
+        F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    ).alias("hamming")
+
+
 def hamming_near_dups(
     df: DataFrame, hash_col: str, max_hamming: int = 3, chunks: int = 4,
     id_col: str = "doc_id", n_bits: int = 64,
 ) -> DataFrame:
     """Generic Hamming-ball pair search over ANY precomputed n-bit bigint
     hash column (simhash, image phash, audio fingerprint) via the pigeonhole
-    chunk trick: explode each hash into ``chunks`` equal bit-slices, equality
-    join on (chunk_idx, chunk_val), exact-verify bit_count(xor) ≤ max_hamming.
+    chunk trick: bucket on each of ``chunks`` equal bit-slices
+    (``chunk_keys``), exact-verify bit_count(xor) ≤ max_hamming.
     Exhaustive iff max_hamming ≤ chunks − 1 (see simhash_near_dups for the
-    recall contract). Shuffle key is the chunk value — never all-pairs.
-
-    Uses unsigned shifts so full-width signed 64-bit hashes (e.g. the image
-    phash, whose top bit may be set) chunk correctly; for non-negative
-    hashes this is bit-identical to the arithmetic shift the SQL oracles use.
-    Output: (id_a, id_b, hamming) with id_a < id_b, each pair once.
+    recall contract). Output: (id_a, id_b, hamming) with id_a < id_b, each
+    pair once.
 
     The (id, hash) input is materialized ONCE (localCheckpoint — the same
     truncate-and-reuse discipline as near_dup_clusters / ngram_jaccard_pairs)
@@ -745,33 +703,9 @@ def hamming_near_dups(
     tokenize+hash+aggregate pipeline, measured at 2× the operator cost in
     round 2. Note this runs one Spark job at DataFrame-construction time."""
     df = df.select(id_col, hash_col).localCheckpoint(eager=True)
-    width = n_bits // chunks
-    chunked = df.select(
-        id_col, hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("c"),
-                        F.shiftrightunsigned(hash_col, c * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("cv"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, hash_col, "e.c", "e.cv")
-    a = chunked.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("sh_a"), "c", "cv")
-    b = chunked.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("sh_b"), "c", "cv")
-    return (
-        a.join(b, ["c", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return bucket_pairs(
+        df, id_col, chunk_keys(hash_col, n_bits, chunks), [hash_col],
+        hamming(hash_col), F.col("hamming") <= max_hamming,
     )
 
 

@@ -24,6 +24,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from pegasus_spark.operators import bucket_pairs
+
 N_SIGN_BITS = 16
 
 
@@ -123,22 +125,15 @@ def embedding_near_dup_pairs(
     n_bits: int = N_SIGN_BITS,
 ) -> DataFrame:
     """Embedding-cosine near-dup: sign-LSH bucket equality join → exact
-    cosine ≥ tau verify within buckets. No all-pairs scan; shuffle key is
-    the bucket. `n_bits` trades candidate recall vs bucket size: fewer bits
-    → bigger buckets → more exact-verify work (pick ~log2(n_rows) bits so
-    expected bucket occupancy stays O(1) as the table grows)."""
-    b = df.withColumn("bucket", sign_bucket(vec_col, n_bits))
-    a1 = b.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket")
-    a2 = b.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket")
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(_dot(F.col("va"), F.col("va"))) * F.sqrt(_dot(F.col("vb"), F.col("vb")))
-    )
-    return (
-        a1.join(a2, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cos, 4))
-        .filter(F.col("cos") >= tau)
-        .select("id_a", "id_b", "cos")
+    cosine ≥ tau verify within buckets (``operators.bucket_pairs``, one
+    bucket per row). `n_bits` trades candidate recall vs bucket size: fewer
+    bits → bigger buckets → more exact-verify work (pick ~log2(n_rows) bits
+    so expected bucket occupancy stays O(1) as the table grows)."""
+    va, vb = F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")
+    cos = _dot(va, vb) / (F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb)))
+    return bucket_pairs(
+        df, id_col, sign_bucket(vec_col, n_bits), [vec_col],
+        F.round(cos, 4).alias("cos"), F.col("cos") >= tau,
     )
 
 
@@ -660,12 +655,10 @@ def semantic_dedup(
     ``spherical_kmeans``.
 
     Scale shape: the assignment shuffles one row per vector; the pair probe
-    shuffles (cell, id, q) once per side of ONE equality join on cell.
-    Within-cell work is quadratic in cell size BY DESIGN — SemDeDup scales k
-    with n (k ≈ n / target_cell_size, the paper uses ~50k cells for LAION)
-    so cells stay O(10³-10⁴) rows and every cell's pair block fits one task;
-    a hot cell is a skew key, which AQE's skew-join split handles because
-    the probe is a plain shuffle join, not a custom kernel.
+    is ``operators.bucket_pairs`` keyed on the cell. Within-cell work is
+    quadratic in cell size BY DESIGN — SemDeDup scales k with n
+    (k ≈ n / target_cell_size, the paper uses ~50k cells for LAION) so
+    cells stay O(10³-10⁴) rows and every cell's pair block fits one task.
 
     Returns (id, cell, is_kept INT 0/1) — survivors carry is_kept=1; the
     curated view is ``filter(is_kept = 1)`` with payloads joined back late.
@@ -680,15 +673,15 @@ def semantic_dedup(
     # one assignment subtree feeding three plan arms (both probe sides + the
     # verdict join): pin it so the iterative k-means doesn't recompute 3×
     v = v.localCheckpoint(eager=False)
-    a, b = v.alias("a"), v.alias("b")
-    cos = _dot_pre(F.col("a.qd"), F.col("b.qd")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
+    cos = _dot_pre(F.col("qd_a"), F.col("qd_b")) / (F.col("nrm_a") * F.col("nrm_b"))
+    # the higher id of a pair is the one dropped
     dups = (
-        a.join(b, F.col("a.cell") == F.col("b.cell"))
-        .filter(F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))
-        .filter(F.round(cos * 10000, 0).cast("bigint") >= F.lit(tau_x10k))
-        .select(F.col(f"a.{id_col}").alias(id_col))
+        bucket_pairs(
+            v, id_col, F.col("cell"), ["qd", "nrm"],
+            F.round(cos * 10000, 0).cast("bigint").alias("_c"),
+            F.col("_c") >= F.lit(tau_x10k),
+        )
+        .select(F.col("id_b").alias(id_col))
         .distinct()
     )
     return (

@@ -584,3 +584,28 @@ def test_audio_chunk_plan_spans_and_exclusion(spark):
         for r in sorted(got["a_31s"], key=lambda r: r["chunk_idx"])
     ]
     assert spans31 == [(0, 30000), (24000, 31000)]
+
+
+def test_image_decontaminate_broadcasts_eval_side(spark):
+    """With size-based broadcasting off, both joins still broadcast: the
+    eval hashes into the chunk probe (the caller's hint) and the flagged
+    ids back onto the corpus. The corpus never shuffles."""
+    from pegasus_spark.multimodal import image_decontaminate
+
+    df = spark.createDataFrame(
+        [("a", 5), ("b", 5 - (1 << 63)), ("c", (1 << 40) | (1 << 20) | 1)],
+        "image_id string, phash long",
+    )
+    evals = spark.createDataFrame([(4,)], "eval_phash long")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = image_decontaminate(df, evals, max_hamming=2, chunks=3)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r["image_id"]: r["contaminated"] for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert len(joins) == 2, plan
+    assert all("BroadcastHashJoin" in j and "BuildRight" in j for j in joins), plan
+    assert got == {"a": True, "b": True, "c": False}

@@ -1660,3 +1660,133 @@ class TestMinhashIndexDedup:
         assert 1 in got and 2 not in got and 100 not in got
         assert got[1]["n_index_matches"] == 1
         assert got[1]["max_sig_matches"] >= 4
+
+
+def _signed64(x: int) -> int:
+    x &= (1 << 64) - 1
+    return x - (1 << 64) if x >> 63 else x
+
+
+def _plan(df, which: str = "optimizedPlan") -> str:
+    return getattr(df._jdf.queryExecution(), which)().toString()
+
+
+class TestBucketPairs:
+    """``operators.bucket_pairs``, the one candidate-then-verify join behind
+    every bucketed near-dup family."""
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        bases=st.lists(st.integers(-(1 << 63), (1 << 63) - 1), min_size=1, max_size=3),
+        rows=st.lists(
+            st.tuples(st.integers(0, 2), st.lists(st.integers(0, 63), max_size=4)),
+            min_size=1, max_size=10,
+        ),
+        n_probe=st.integers(0, 4),
+        chunks=st.integers(2, 4),
+    )
+    def test_hamming_chunks_match_brute_force(self, spark, bases, rows, n_probe, chunks):
+        """Self and probe forms over pigeonhole chunk keys equal the
+        brute-force Hamming ball at max_hamming = chunks - 1 (exhaustive):
+        full-width signed hashes with the top bit set, repeated hashes
+        (pairs meeting in every chunk come out once), and probe rows that
+        are near copies of the left side's."""
+        from pegasus_spark.operators import bucket_pairs
+        from pegasus_spark.session import local_df
+        from pegasus_spark.textops.dedup import chunk_keys, hamming
+
+        hashes = []
+        for base, flips in rows:
+            h = bases[base % len(bases)]
+            for b in flips:
+                h ^= 1 << b
+            hashes.append(_signed64(h))
+        left = list(enumerate(hashes))
+        right = [(100 + j, _signed64(h ^ (1 << (17 * j % 64))))
+                 for j, h in enumerate(hashes[:n_probe])]
+        max_h = chunks - 1
+
+        def dist(x, y):
+            return bin((x ^ y) & ((1 << 64) - 1)).count("1")
+
+        want = {(0, a, b, dist(x, y)) for a, x in left for b, y in left
+                if a < b and dist(x, y) <= max_h}
+        want |= {(1, a, b, dist(x, y)) for a, x in left for b, y in right
+                 if dist(x, y) <= max_h}
+
+        schema = "id long, h long"
+        ldf, rdf = local_df(spark, left, schema), local_df(spark, right, schema)
+
+        def pairs(right_df):
+            return bucket_pairs(
+                ldf, "id", chunk_keys("h", 64, chunks), ["h"],
+                hamming("h"), F.col("hamming") <= max_h, right=right_df,
+            )
+
+        got = (pairs(None).withColumn("form", F.lit(0))
+               .unionByName(pairs(rdf).withColumn("form", F.lit(1))).collect())
+        rows_out = [(r["form"], r["id_a"], r["id_b"], r["hamming"]) for r in got]
+        assert len(rows_out) == len(set(rows_out))  # each pair once
+        assert set(rows_out) == want
+
+    def test_minhash_near_dups_plan_has_one_join(self, doc_df):
+        """The signature rides the band join: no id joins back to the
+        signature table."""
+        plan = _plan(minhash_near_dups(doc_df))
+        joins = [ln for ln in plan.splitlines() if ln.lstrip(" +-:|").startswith("Join ")]
+        assert len(joins) == 1, plan
+
+    def test_embedding_pairs_plan_has_no_aggregate(self, spark):
+        """A scalar bucket key needs no dedupe, hence no aggregate."""
+        from pegasus_spark.textops.similarity import embedding_near_dup_pairs
+
+        emb = spark.createDataFrame(
+            [(i, [float(i % 3), 1.0, 0.5, float(i)]) for i in range(6)],
+            "vec_id long, embedding array<float>",
+        )
+        out = embedding_near_dup_pairs(emb, tau=0.5, n_bits=2)
+        assert "Aggregate" not in _plan(out), _plan(out)
+        assert out.count() > 0
+
+    def test_minhash_decontaminate_broadcasts_eval_side(self, doc_df, spark):
+        """With size-based broadcasting off, the eval side still broadcasts
+        into the band probe (the caller's hint), and it is the only join."""
+        from pegasus_spark.textops.dedup import minhash_decontaminate
+
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            out = minhash_decontaminate(
+                doc_df.filter("doc_id <> 2"), doc_df.filter("doc_id = 2")
+            )
+            plan = _plan(out, "executedPlan")
+            got = {r["doc_id"] for r in out.collect()}
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        joins = [ln for ln in plan.splitlines() if "Join " in ln]
+        assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], plan
+        assert "BuildRight" in joins[0], plan
+        assert {1, 5} <= got and 4 not in got
+
+    def test_minhash_accuracy_broadcast_switch_equal_rows(self, doc_df, spark):
+        """Both sides of ACCURACY_BROADCAST_MAX_IDS give the same rows. With
+        size-based broadcasting off, the shingle-array joins sort-merge only
+        on the large side."""
+        from unittest import mock
+
+        from pegasus_spark.textops import dedup
+
+        def run(max_ids):
+            with mock.patch.object(dedup, "ACCURACY_BROADCAST_MAX_IDS", max_ids):
+                out = dedup.minhash_accuracy(doc_df, min_sig_match=1)
+                return _plan(out, "executedPlan"), sorted(map(tuple, out.collect()))
+
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            (small_plan, small), (large_plan, large) = run(10**9), run(-1)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert "SortMergeJoin" not in small_plan, small_plan
+        assert "SortMergeJoin" in large_plan, large_plan
+        assert small == large and small
