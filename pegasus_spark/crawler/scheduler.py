@@ -10,7 +10,9 @@ the SURVEY §7.1 design: each round is one Spark batch —
     ③ parse (Catalyst expressions only) + route by page kind
     ④ CDC merge into apartments (+ change/meta-change side outputs)
     ⑤ payload join-back → items table
-    ⑥ canonicalize + bloom/left_anti dedup → salted enqueue
+    ⑥ canonicalize + bloom/left_anti dedup → salted enqueue (a round that
+      dequeued no parent kind — root/district/region — writes only the
+      fetch-state delta)
     ⑦ metrics + fetch-log append, snapshot + checkpoint commit
 
 The fixed 5-stage Lianjia DAG (lianjia/proj.go:48-59) falls out of the
@@ -35,6 +37,7 @@ import json
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -236,29 +239,43 @@ class CrawlScheduler:
             .drop("status")
         )
 
-    def _discoveries_from(self, parsed: DataFrame) -> DataFrame:
+    def _discoveries_from(self, parsed: DataFrame, kind_counts: dict) -> DataFrame | None:
         """③ route: per parent kind, emit raw child rows (url, kind, priority,
         page, depth, region) — the F1/F2/F3 source-side filters applied here,
-        the cheapest place (SURVEY §4.1)."""
-        # root → district links
-        d_raw = child_links(parsed.filter(F.col("kind") == "root"))
+        the cheapest place (SURVEY §4.1). ``parsed`` holds only dequeued
+        rows, so a parent kind missing from the round's ``kind_counts`` has
+        no rows and its branch is not planned at all. None when the round
+        dequeued no parent kind: a listing-only round discovers nothing."""
+        branches = [
+            build(parsed.filter(F.col("kind") == kind))
+            for kind, build in (
+                ("root", self._district_links),
+                ("district", self._region_links),
+                ("region", self._listing_links),
+            )
+            if kind_counts.get(kind)
+        ]
+        return reduce(DataFrame.unionByName, branches) if branches else None
+
+    def _district_links(self, roots: DataFrame) -> DataFrame:
+        """root → district links (F2 excluded districts, allowlist)."""
         d = (
-            with_url_columns(d_raw)
+            with_url_columns(child_links(roots))
             .withColumn("abbr", abbr_from_url())
             .filter(~F.col("abbr").isin(*EXCLUDED_DISTRICTS))
         )
         if self.allowlist:
             d = d.filter(F.col("abbr").isin(*self.allowlist.keys()))
-        districts = d.select(
+        return d.select(
             "url", F.lit("district").alias("kind"), F.lit(DISTRICT_P).alias("priority"),
             F.lit(0).alias("page"), F.lit(1).alias("depth"),
             F.lit(None).cast("string").alias("region"),
         )
 
-        # district → region links (F3: per-district region allowlist)
-        r_raw = child_links(parsed.filter(F.col("kind") == "district"))
+    def _region_links(self, districts: DataFrame) -> DataFrame:
+        """district → region links (F3: per-district region allowlist)."""
         r = (
-            with_url_columns(r_raw)
+            with_url_columns(child_links(districts))
             .withColumn("abbr", abbr_from_url())
             .withColumn("parent_abbr", abbr_from_url("parent_url"))
         )
@@ -271,20 +288,21 @@ class CrawlScheduler:
             unrestricted = r.filter(~F.col("parent_abbr").isin(*restricted.keys()))
             allowed = r.join(F.broadcast(pairs), ["parent_abbr", "abbr"], "left_semi")
             r = unrestricted.unionByName(allowed)
-        regions = r.select(
+        return r.select(
             "url", F.lit("region").alias("kind"), F.lit(REGION_P).alias("priority"),
             F.lit(0).alias("page"), F.lit(2).alias("depth"),
             F.col("abbr").alias("region"),
         )
 
-        # region → listing-page fan-out (F4 empty-region elision; K1 LPT prio)
+    def _listing_links(self, regions: DataFrame) -> DataFrame:
+        """region → listing-page fan-out (F4 empty-region elision; K1 LPT
+        prio)."""
         reg = (
-            parsed.filter(F.col("kind") == "region")
-            .withColumn("total_page", total_page_col())
+            regions.withColumn("total_page", total_page_col())
             .filter(F.col("total_page") > 0)
             .withColumn("abbr", abbr_from_url())
         )
-        listing = reg.select(
+        return reg.select(
             "url", "abbr", "total_page",
             F.explode(F.sequence(F.lit(1), F.col("total_page"))).alias("pg"),
         ).select(
@@ -295,7 +313,6 @@ class CrawlScheduler:
             F.lit(3).alias("depth"),
             F.col("abbr").alias("region"),
         )
-        return districts.unionByName(regions).unionByName(listing)
 
     # -- bootstrap / resume --------------------------------------------------
 
@@ -433,7 +450,8 @@ class CrawlScheduler:
             )
             f_cdc = ex.submit(self._cdc_chain, parsed, kind_counts, ckpt, round_no)
             f_enq = ex.submit(
-                self._enqueue_chain, parsed, frontier, fetched, ckpt, round_no, dq_hosts
+                self._enqueue_chain, parsed, kind_counts, frontier, fetched, ckpt,
+                round_no, dq_hosts,
             )
 
             # lineage, updated INCREMENTALLY: a dirty bucket's delta carries
@@ -571,7 +589,7 @@ class CrawlScheduler:
         - the batch's frontier updates ride the driver between rounds (the
           `touched` url→row dict — bounded by the entry condition
           dq < microbatch_threshold plus microbatch_touched_cap: candidate
-          collection streams against the remaining cap and a single round's
+          collection is bounded by the remaining cap and a single round's
           oversized fan-out overflows to a fully DISTRIBUTED flush
           (_microbatch_new_rows), so no round can exceed the driver budget),
           composed with the committed base via a broadcast anti-join union
@@ -635,8 +653,8 @@ class CrawlScheduler:
                 )
                 f_new = ex.submit(
                     self._microbatch_new_rows,
-                    parsed, base_frontier, touched, round_no, base_cols,
-                    n_seen0, ckpt,
+                    parsed, kind_counts, base_frontier, touched, round_no,
+                    base_cols, n_seen0, ckpt,
                 )
                 f_metrics.result()
                 upd_rows = f_upd.result()
@@ -722,7 +740,8 @@ class CrawlScheduler:
         }
 
     def _microbatch_new_rows(
-        self, parsed, base_frontier, touched, round_no, base_cols, n_seen, ckpt,
+        self, parsed, kind_counts, base_frontier, touched, round_no, base_cols,
+        n_seen, ckpt,
     ) -> tuple[list | None, DataFrame | None]:
         """Discoveries → candidates → URL-seen pruning, micro-batch flavor.
         Normally the candidate set is tiny (batch entry condition × page
@@ -731,17 +750,21 @@ class CrawlScheduler:
         committed frontier for bloom-positives only — returns (rows, None),
         row order immaterial (every consumer sorts canonically).
 
-        The driver-residency is NOT assumed, it is enforced: candidates
-        stream through toLocalIterator against the remaining
-        microbatch_touched_cap budget, so a surprise fan-out (a sub-threshold
-        dequeue of region pages each advertising thousands of listing pages)
-        can never OOM the driver. On overflow the collected prefix is
-        discarded and the round's new rows are computed fully DISTRIBUTED —
-        exact anti-join vs the committed base and the touched overlay —
-        returning (None, new_df); the caller folds that DataFrame into an
-        immediate batch flush."""
+        The driver-residency is NOT assumed, it is enforced: one bounded
+        collect takes at most ``cap + len(touched) + 1`` candidate rows,
+        where ``cap`` is what is left of microbatch_touched_cap — so at most
+        microbatch_touched_cap + 1 rows while the touched dict is within its
+        cap, and a surprise fan-out (a sub-threshold dequeue of region pages
+        each advertising thousands of listing pages) can never OOM the
+        driver. Candidates are unique by URL, so at most ``len(touched)`` of
+        the collected rows are touched ones: more than ``cap`` untouched
+        candidates exist iff more than ``cap`` are among the collected rows.
+        On overflow the collected rows are discarded and the round's new
+        rows are computed fully DISTRIBUTED — exact anti-join vs the
+        committed base and the touched overlay — returning (None, new_df);
+        the caller folds that DataFrame into an immediate batch flush."""
         cand = prepare_candidates(
-            self._discoveries_from(parsed), self.budget, round_no
+            self._discoveries_from(parsed, kind_counts), self.budget, round_no
         ).select(*base_cols)
         cap = max(0, self.microbatch_touched_cap - len(touched))
         dict_tier = n_seen <= self.bloom_partitioned_threshold
@@ -750,15 +773,11 @@ class CrawlScheduler:
             if dict_tier
             else cand.join(base_frontier.select("url"), "url", "left_anti")
         )
-        rows: list = []
-        overflow = False
-        for r in probe_src.toLocalIterator():  # one partition in flight
-            if r["url"] in touched:
-                continue
-            rows.append(r)
-            if len(rows) > cap:
-                overflow = True
-                break
+        rows = [
+            r for r in probe_src.limit(cap + len(touched) + 1).collect()
+            if r["url"] not in touched
+        ]
+        overflow = len(rows) > cap
         if not overflow:
             if not dict_tier or not rows:
                 return rows, None
@@ -1023,8 +1042,8 @@ class CrawlScheduler:
         return apt_version, n_cards
 
     def _enqueue_chain(
-        self, parsed, frontier, fetched, ckpt: Checkpoint, round_no: int,
-        dq_hosts: set,
+        self, parsed, kind_counts, frontier, fetched, ckpt: Checkpoint,
+        round_no: int, dq_hosts: set,
     ):
         """⑥: discoveries → canonicalize → bloom/left_anti dedup → bloom
         version append → INCREMENTAL frontier commit. Only the dirty host
@@ -1033,58 +1052,65 @@ class CrawlScheduler:
         manifest — per-round frontier IO is O(dirty buckets + new rows), the
         Iceberg-MERGE shape the 10^10-URL design point needs. ``dq_hosts``
         (the fetched side of the dirty set) comes from the round's single
-        dequeue-breakdown collect. Returns
+        dequeue-breakdown collect. A round that dequeued no parent kind
+        (``_discoveries_from`` is None) writes only the fetch-state delta of
+        the dequeued hosts' buckets: no candidates, no unseen probe, no count
+        and no bloom version — what the full chain computes for an empty
+        ``new_rows``. Returns
         (n_new, bloom_versions, cached delta df, dirty bucket set)."""
-        discoveries = self._discoveries_from(parsed)
-        cand = prepare_candidates(discoveries, self.budget, round_no)
-        n_seen = ckpt.counters.get("urls_enqueued", 0)
-        if n_seen > self.bloom_partitioned_threshold:
-            # filter too big to broadcast: probe via shard cogroup
-            shards = self.store.read_bloom(ckpt.bloom_versions)
-            new_rows = filter_unseen(
-                self.spark, cand, frontier, self.bloom,
-                bloom_shards_partitioned=shards,
-            ).cache()
-        else:
-            new_rows = filter_unseen(
-                self.spark, cand, frontier, self.bloom,
-                bloom_arrays=self._bloom_dict(ckpt),
-            ).cache()
-        # the chain's driver-sequential Spark jobs dominated small rounds
-        # (~7 s of fixed latency even at dq=8, measured via
-        # SPARK_GRAFT_PHASE_LOG); the independent ones overlap here instead:
-        # unseen count ∥ (bloom build/write ∥ new-host collect). The fetched
-        # side of the dirty set is already known (dq_hosts, from the round's
-        # single dequeue collect). Writes stay independent tables (bloom vs
-        # frontier) and the round's commit point is unchanged.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            n_new = new_rows.count()
-            bloom_versions = list(ckpt.bloom_versions)
-            f_bloom = f_hosts_new = None
-            if n_new:
-                bloom_versions.append(round_no)
-                f_bloom = pool.submit(
-                    self._bloom_commit, new_rows, n_seen, ckpt, round_no, bloom_versions
-                )
-                f_hosts_new = pool.submit(
-                    lambda: {r[0] for r in new_rows.select("host").distinct().collect()}
-                )
-            dirty_hosts = set(dq_hosts)
-            if f_hosts_new is not None:
-                dirty_hosts |= f_hosts_new.result()
-            dirty_buckets = {host_bucket_py(h) for h in dirty_hosts}
-            old_dirty = self.store.read_frontier_buckets(
-                ckpt.frontier_version, sorted(dirty_buckets)
-            )
-            if f_bloom is not None:
-                f_bloom.result()
-
-        updated = self._apply_fetch_states(old_dirty, fetched.select("url", "status"))
-        delta = updated.unionByName(new_rows).cache()
+        discoveries = self._discoveries_from(parsed, kind_counts)
+        n_new, new_rows = 0, None
+        bloom_versions = list(ckpt.bloom_versions)
+        dirty_hosts = set(dq_hosts)
+        if discoveries is not None:
+            cand = prepare_candidates(discoveries, self.budget, round_no)
+            n_seen = ckpt.counters.get("urls_enqueued", 0)
+            if n_seen > self.bloom_partitioned_threshold:
+                # filter too big to broadcast: probe via shard cogroup
+                shards = self.store.read_bloom(ckpt.bloom_versions)
+                new_rows = filter_unseen(
+                    self.spark, cand, frontier, self.bloom,
+                    bloom_shards_partitioned=shards,
+                ).cache()
+            else:
+                new_rows = filter_unseen(
+                    self.spark, cand, frontier, self.bloom,
+                    bloom_arrays=self._bloom_dict(ckpt),
+                ).cache()
+            # the chain's driver-sequential Spark jobs dominated small rounds
+            # (~7 s of fixed latency even at dq=8, measured via
+            # SPARK_GRAFT_PHASE_LOG); the independent ones overlap here
+            # instead: unseen count ∥ (bloom build/write ∥ new-host collect).
+            # The fetched side of the dirty set is already known (dq_hosts,
+            # from the round's single dequeue collect). Writes stay
+            # independent tables (bloom vs frontier) and the round's commit
+            # point is unchanged.
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                n_new = new_rows.count()
+                if n_new:
+                    bloom_versions.append(round_no)
+                    f_bloom = pool.submit(
+                        self._bloom_commit, new_rows, n_seen, ckpt, round_no,
+                        bloom_versions,
+                    )
+                    f_hosts_new = pool.submit(
+                        lambda: {r[0] for r in new_rows.select("host").distinct().collect()}
+                    )
+                    dirty_hosts |= f_hosts_new.result()
+                    f_bloom.result()
+        dirty_buckets = {host_bucket_py(h) for h in dirty_hosts}
+        old_dirty = self.store.read_frontier_buckets(
+            ckpt.frontier_version, sorted(dirty_buckets)
+        )
+        delta = self._apply_fetch_states(old_dirty, fetched.select("url", "status"))
+        if new_rows is not None:
+            delta = delta.unionByName(new_rows)
+        delta = delta.cache()
         self.store.write_frontier_delta(
             delta, round_no, ckpt.frontier_version, self.n_partitions
         )
-        new_rows.unpersist()
+        if new_rows is not None:
+            new_rows.unpersist()
         return n_new, bloom_versions, delta, dirty_buckets
 
     def _bloom_commit(self, new_rows, n_seen, ckpt: Checkpoint, round_no: int,

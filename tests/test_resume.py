@@ -5,11 +5,22 @@ independent of the partitioning level."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
 import pytest
 
-from pegasus_spark.crawler.fixtures import budget_df, make_site_spec, write_fixture
-from pegasus_spark.crawler.scheduler import CrawlScheduler
+from pegasus_spark.crawler import scheduler
+from pegasus_spark.crawler.fixtures import (
+    EXCLUDED_DISTRICT,
+    budget_df,
+    make_site_spec,
+    write_fixture,
+)
+from pegasus_spark.crawler.parse import parsed_body
+from pegasus_spark.crawler.scheduler import LISTING_P, CrawlScheduler
+from pegasus_spark.session import local_df
 
 TS = 1_700_000_000
 
@@ -264,19 +275,146 @@ def test_microbatch_resume_mid_batch_boundary(spark, fixture_dir, tmp_path_facto
     pd.testing.assert_frame_equal(f1, f2)
 
 
-def test_microbatch_overflow_flush_equivalence(spark, fixture_dir, tmp_path_factory):
+@pytest.fixture(scope="module")
+def nav_site(spark, fixture_dir, tmp_path_factory):
+    """The fixture site with a district nav bar: every district page also
+    links the root and every crawled district, as the reference site's
+    pages do. Region discovery then re-finds URLs an earlier round of the
+    same batch already touched. Returns (spec, fixture dir, per-round
+    outputs, per-round `rounds` table)."""
+    spec, fx = fixture_dir
+    nav = [spec.root_url] + [
+        spec.district_url(d) for d in spec.districts if d != EXCLUDED_DISTRICT
+    ]
+    pages = spark.read.parquet(f"{fx}/site_pages_r1.parquet")
+
+    def with_nav(row):
+        page = row.asDict()
+        if page["kind"] == "district":
+            body = json.loads(page["body"])
+            page["body"] = json.dumps({**body, "children": body["children"] + nav})
+        return tuple(page.values())
+
+    nfx = str(tmp_path_factory.mktemp("navfx"))
+    local_df(spark, map(with_nav, pages.collect()), pages.schema).write.parquet(
+        f"{nfx}/site_pages_r1.parquet"
+    )
+    os.symlink(f"{fx}/items_r1.parquet", f"{nfx}/items_r1.parquet")
+    ref = _mk(spark, spec, nfx, str(tmp_path_factory.mktemp("navref")),
+              microbatch_threshold=0)
+    ref.run()
+    ckpt = ref.store.load_checkpoint()
+    rounds = (
+        ref.store.read_appended("rounds", ckpt.appended_rounds)
+        .toPandas().sort_values("round").reset_index(drop=True)
+    )
+    return spec, nfx, _outputs(ref), rounds
+
+
+@pytest.mark.parametrize("over", [False, True], ids=["at_cap", "over_cap"])
+def test_microbatch_overflow_flush_equivalence(spark, nav_site, tmp_path_factory, over):
     """A discovery fan-out larger than the driver budget must overflow to
     the distributed flush (_microbatch_new_rows returns a DataFrame, the
     batch commits immediately) and still produce byte-identical outputs —
-    the driver-residency guard is a physical choice, never a semantic one."""
+    the driver-residency guard is a physical choice, never a semantic one.
+
+    microbatch_touched_cap sits exactly at round 2's need (the touched rows
+    of round 1 plus round 2's fresh candidates) or one below it. Round 2's
+    candidates also hold already-touched URLs (the nav links), which the
+    bounded candidate collect must see past: at the cap nothing overflows
+    in round 2, one below it round 2 overflows. Both equal the per-round
+    commit."""
+    spec, nfx, want, ref_rounds = nav_site
+    r = ref_rounds.set_index("round")
+    need = int(r.loc[1, "dequeued"] + r.loc[1, "new_urls"] + r.loc[2, "new_urls"])
+    s = _mk(spark, spec, nfx, str(tmp_path_factory.mktemp("wcap")),
+            microbatch_touched_cap=need - 1 if over else need)
+    overflowed = {}
+    probe = s._microbatch_new_rows
+
+    def spy(parsed, kind_counts, base, touched, round_no, *args):
+        rows, overflow_df = probe(parsed, kind_counts, base, touched, round_no, *args)
+        overflowed[round_no] = overflow_df is not None
+        return rows, overflow_df
+
+    s._microbatch_new_rows = spy
+    s.run()
+    assert overflowed[1] is False and overflowed[2] is over
+    for got, exp in zip(_outputs(s), want):
+        pd.testing.assert_frame_equal(got, exp)
+    ckpt = s.store.load_checkpoint()
+    rounds = (
+        s.store.read_appended("rounds", ckpt.appended_rounds)
+        .toPandas().sort_values("round").reset_index(drop=True)
+    )
+    cols = [c for c in rounds.columns if c != "wall_s"]  # wall is physical
+    pd.testing.assert_frame_equal(rounds[cols], ref_rounds[cols])
+
+
+def _root_parsed(spark, spec):
+    """The parsed root page, as the round's chains see it."""
+    body = json.dumps({
+        "kind": "root",
+        "children": [spec.district_url(d) for d in spec.districts],
+    })
+    page = local_df(
+        spark, [(spec.root_url, "h0.lianjia.test", "root", body)],
+        "url string, host string, kind string, body string",
+    )
+    return parsed_body(page).select("url", "host", "kind", "parsed")
+
+
+def test_discoveries_plan_only_dequeued_parent_kinds(spark, fixture_dir, tmp_path_factory):
+    """Each discovery branch reads only its parent kind's rows, and the
+    round's chains only see dequeued rows: a root-only round plans the one
+    root → district branch (no Union), a listing-only round plans none."""
     spec, fx = fixture_dir
-    outs = []
-    for cap in (100_000, 5):  # normal vs forced-overflow on the first rounds
-        w = str(tmp_path_factory.mktemp(f"wcap{cap}"))
-        s = _mk(spark, spec, fx, w, microbatch_touched_cap=cap)
-        s.run()
-        outs.append(_outputs(s))
-    (a1, l1, f1), (a2, l2, f2) = outs
-    pd.testing.assert_frame_equal(a1, a2)
-    pd.testing.assert_frame_equal(l1, l2)
-    pd.testing.assert_frame_equal(f1, f2)
+    s = _mk(spark, spec, fx, str(tmp_path_factory.mktemp("wdisc")))
+    parsed = _root_parsed(spark, spec)
+    roots = s._discoveries_from(parsed, {"root": 1})
+    assert "Union" not in roots._jdf.queryExecution().analyzed().toString()
+    assert {r["kind"] for r in roots.collect()} == {"district"}
+    every = s._discoveries_from(parsed, {"root": 1, "district": 2, "region": 3})
+    assert "Union" in every._jdf.queryExecution().analyzed().toString()
+    assert s._discoveries_from(parsed, {"listing_page": 4}) is None
+
+
+def test_listing_only_round_writes_state_delta_only(
+    spark, fixture_dir, tmp_path_factory, monkeypatch
+):
+    """A round that dequeues only listing pages can discover nothing, so it
+    builds no candidates and no URL-seen probe: it commits the fetch states
+    of its dequeued rows, no new URLs and no bloom version."""
+    spec, fx = fixture_dir
+    s = _mk(spark, spec, fx, str(tmp_path_factory.mktemp("wlist")))
+    region = next(
+        r for r in spec.regions.values()
+        if r.total_page >= 2 and r.abbr != spec.blocked_region
+    )
+    pages = [
+        (region.page_url(p), "listing_page", LISTING_P + region.total_page, p, 3,
+         region.abbr)
+        for p in range(1, region.total_page + 1)
+    ]
+    monkeypatch.setattr(s, "_seeds_df", lambda: local_df(
+        spark, pages,
+        "url string, kind string, priority int, page int, depth int, region string",
+    ))
+    ckpt = s.bootstrap()
+
+    def boom(*a, **k):
+        raise AssertionError("a listing-only round planned discovery work")
+
+    monkeypatch.setattr(scheduler, "prepare_candidates", boom)
+    monkeypatch.setattr(scheduler, "filter_unseen", boom)
+    new_ckpt, info = s.run_round(ckpt)
+    assert info["dequeued"] == len(pages) and info["new_urls"] == 0
+    assert info["cards"] > 0
+    assert new_ckpt.bloom_versions == ckpt.bloom_versions
+    frontier = s.store.read_frontier(new_ckpt.frontier_version)
+    assert {(r["url"], r["state"]) for r in frontier.select("url", "state").collect()} == {
+        (p[0], "fetched") for p in pages
+    }
+    assert new_ckpt.bucket_lineage == {
+        str(scheduler.host_bucket_py(region.host)): {"fetched": len(pages)}
+    }
