@@ -16,6 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pegasus_spark.operators import exact_percentiles
 from pegasus_spark.textops import dedup as D
 from pegasus_spark.textops import similarity as S
 from pegasus_spark.textops import text as T
@@ -1992,9 +1993,9 @@ def q_pareto_docs(spark, sf_dir):
     """Quality/length Pareto frontier (text.pareto_frontier): the docs no
     other doc weakly dominates on (quality, n_tokens) — the skyline a
     curator reads as "the best doc at every length". Sweep over DISTINCT
-    points via the ranged prefix-max machinery (no O(n²) dominance join,
-    no single-partition window), winners joined back by (quality,
-    n_tokens) as a broadcast semi join."""
+    points via the ranged running max (no O(n²) dominance join, no
+    single-partition window), winners joined back by (quality, n_tokens)
+    as a broadcast semi join."""
     d = T.with_quality(_docs(spark, sf_dir)).select(
         "doc_id", "quality", "n_tokens"
     )
@@ -2769,23 +2770,26 @@ def q_sequence_pack(spark, sf_dir):
     corpus concatenated in doc_id order is cut into fixed 2048-token
     training sequences; each doc reports its global token start offset and
     the [first_seq, last_seq] span it lands in — docs CROSS sequence
-    boundaries, unlike pack_shards' whole-doc bins. This entry gates the
-    small-input strategy (one global running-sum window); its twin
-    `sequence_pack_ranged` forces the 100 TB strategy against the SAME
-    oracle. All chunk math is exact integer division (DIV / //)."""
-    return T.sequence_pack(_docs(spark, sf_dir), seq_len=2048).orderBy("doc_id")
+    boundaries, unlike pack_shards' whole-doc bins. This entry passes the
+    corpus size (a parquet count, which reads only file footers), so it
+    plans the small-input form (one global running-sum window) up to the
+    size switch; its twin `sequence_pack_ranged` passes no size and so gates
+    the 100 TB form against the SAME oracle. All chunk math is exact
+    integer division (DIV / //)."""
+    docs = _docs(spark, sf_dir)
+    return T.sequence_pack(docs, seq_len=2048, n_rows=docs.count()).orderBy("doc_id")
 
 
 def q_sequence_pack_ranged(spark, sf_dir):
     """The 100 TB strategy of sequence_pack, value-checked against the SAME
-    oracle as the window form (the strategy switch is a pure physical
-    choice, like the scheduler's dequeue-seq switch): repartitionByRange on
-    doc_id → partition-local running sums → broadcast per-partition token
-    offsets (a ≤ n_partitions-row collect) — NO single-partition exchange,
+    oracle as the window form (the size switch is a pure physical choice):
+    an unsized input takes the ranged form — repartitionByRange on doc_id
+    → partition-local running sums → per-partition token offsets (a
+    ≤ n_partitions-row collect) — NO single-partition exchange,
     plan-asserted in tests/test_textops.py. n_partitions=5 here so the
     gate actually exercises multi-partition offset stitching at sf0.01."""
     return T.sequence_pack(
-        _docs(spark, sf_dir), seq_len=2048, ranged=True, n_partitions=5
+        _docs(spark, sf_dir), seq_len=2048, n_partitions=5
     ).orderBy("doc_id")
 
 
@@ -4976,27 +4980,11 @@ def q_length_percentiles(spark, sf_dir):
     |sources| rows. At 100 TB the exact variant is the audit tool — the
     in-pipeline path would switch to percentile_approx (KLL sketch,
     documented error bound) and avoid the per-group sort entirely."""
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    d = (
-        _docs(spark, sf_dir)
-        .select("source", "doc_id", "n_chars")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "n", F.count(F.lit(1)).over(Window.partitionBy("source"))
-        )
-    )
-    def pick(p: int, name: str):
-        return F.max(
-            F.when(F.col("rn") == F.expr(f"({p} * n + 99) DIV 100"), F.col("n_chars"))
-        ).alias(name)
-    return (
-        d.groupBy("source")
-        .agg(
-            F.max("n").cast("bigint").alias("n_docs"),
-            pick(25, "p25"), pick(50, "p50"), pick(75, "p75"), pick(95, "p95"),
-        )
-        .orderBy("source")
-    )
+    d = _docs(spark, sf_dir).select("source", "doc_id", "n_chars")
+    picks = {"p25": 25, "p50": 50, "p75": 75, "p95": 95}
+    return exact_percentiles(
+        d, ["source"], ["n_chars", "doc_id"], "n_chars", picks, "n_docs"
+    ).orderBy("source")
 
 
 ORACLE_LENGTH_PERCENTILES = """
@@ -5836,19 +5824,9 @@ def q_conversion_latency(spark, sf_dir):
         .agg(F.min("t").alias("tc"), F.first("ta").alias("ta"))
     )
     lat = c.select("user_id", (F.col("tc") - F.col("ta")).alias("lat"))
-    w = Window.orderBy("lat", "user_id")
-    d = (
-        lat.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    )
-    def pick(p: int, name: str):
-        return F.max(
-            F.when(F.col("rn") == F.expr(f"({p} * n + 99) DIV 100"), F.col("lat"))
-        ).alias(name)
-    return d.agg(
-        F.max("n").cast("bigint").alias("n_converted"),
-        pick(25, "p25_us"), pick(50, "p50_us"), pick(75, "p75_us"),
-        pick(95, "p95_us"),
+    picks = {"p25_us": 25, "p50_us": 50, "p75_us": 75, "p95_us": 95}
+    return exact_percentiles(
+        lat, [], ["lat", "user_id"], "lat", picks, "n_converted",
         F.round(F.sum("lat") / F.count(F.lit(1)), 4).alias("mean_us"),
     )
 

@@ -28,6 +28,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pegasus_spark.operators import exact_percentiles, ordered_prefix
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -822,44 +824,6 @@ ORDER BY burst_ratio_milli DESC, p.user_id ASC
 """
 
 
-# below this row count the ranged machinery's checkpoint + offset collect
-# costs more than the one-task window it avoids (the
-# SEQPACK_SCALABLE_THRESHOLD precedent — a pure physical choice, outputs
-# identical; pinned by test_global_disc_rank_matches_window)
-GLOBALRANK_SCALABLE_THRESHOLD = 100_000
-
-
-def _global_disc_rank(
-    df: DataFrame, order_cols: list, n: int, n_rows: int | None = None,
-) -> DataFrame:
-    """Exact global row_number over ``order_cols`` WITHOUT a
-    single-partition window — repartitionByRange on the order, partition-
-    local row_number, plus ``range_prefix_offsets`` row-count offsets (the
-    with_dequeue_seq pattern; placement frozen by eager localCheckpoint
-    before the ≤ n_partitions-row collect). Adds ``rn``.
-
-    ``n_rows`` (when the caller already knows it) picks the strategy:
-    at or under GLOBALRANK_SCALABLE_THRESHOLD a plain global window is
-    cheaper than the checkpoint + collect it avoids — one small task
-    beats four jobs. Same rows either way."""
-    if n_rows is not None and n_rows <= GLOBALRANK_SCALABLE_THRESHOLD:
-        w = Window.orderBy(*[F.col(c) for c in order_cols])
-        return df.withColumn("rn", F.row_number().over(w))
-    from pegasus_spark.operators import range_prefix_offsets
-
-    d = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # freeze placement BEFORE the collect
-    )
-    off = range_prefix_offsets(d)
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        d.withColumn("rn", F.row_number().over(w) + off[F.col("_pid")])
-        .drop("_pid")
-    )
-
-
 def q_spend_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier screen on per-customer spend: customers whose total
     order value deviates from the median customer by more than 3× the
@@ -873,13 +837,12 @@ def q_spend_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(|x − med|·100) — multiply and floor are deterministic IEEE) so
     the MAD rank order and the 3× threshold never compare raw doubles.
     Both exact medians are percentile_disc rank math ((50·n+99) DIV 100,
-    the length_percentiles rule) over ``_global_disc_rank`` — the ranged
-    row_number machinery, so neither median pass has a single-partition
-    exchange; each collects only per-partition row counts. The two 1-row
-    median frames broadcast back. At 100 TB this stays the exact audit
-    tool; the in-pipeline path would swap percentile_approx into the same
-    frame."""
-    n_parts = spark.sparkContext.defaultParallelism
+    the length_percentiles rule) over ``operators.ordered_prefix`` row
+    numbers: one window task each while the customer count is under its
+    size switch, otherwise ranged, with no single-partition exchange and
+    only per-partition row counts collected. The two 1-row median frames
+    broadcast back. At 100 TB this stays the exact audit tool; the
+    in-pipeline path would swap percentile_approx into the same frame."""
     s = (
         load(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("custkey"))
@@ -892,7 +855,7 @@ def q_spend_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nc = s.count()  # bounded driver value; also picks the rank strategy
     rank = (50 * nc + 99) // 100
-    r1 = _global_disc_rank(s, ["spend", "custkey"], n_parts, n_rows=nc)
+    r1 = ordered_prefix(s, ["spend", "custkey"], "rn", n_rows=nc)
     med = (
         r1.filter(F.col("rn") == rank)
         .select(F.col("spend").alias("med_spend"))
@@ -905,7 +868,7 @@ def q_spend_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.abs(F.col("spend") - F.col("med_spend")) * 100).cast("bigint"),
         )
     )
-    r2 = _global_disc_rank(d, ["dev_cents", "custkey"], n_parts, n_rows=nc)
+    r2 = ordered_prefix(d, ["dev_cents", "custkey"], "rn", n_rows=nc)
     mad = (
         r2.filter(F.col("rn") == rank)
         .select(F.col("dev_cents").alias("mad_cents"))
@@ -1050,21 +1013,11 @@ def q_fulfillment_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.datediff(F.col("_first_ship"), F.col("_od")).cast("bigint").alias("lag_days"),
     )
-    w = Window.partitionBy("o_orderpriority").orderBy("lag_days", "o_orderkey")
-    ranked = d.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("o_orderpriority"))
-    )
-    pick = lambda p, name: F.max(  # noqa: E731
-        F.when(F.col("rn") == F.expr(f"({p} * n + 99) DIV 100"), F.col("lag_days"))
-    ).alias(name)
-    return (
-        ranked.groupBy("o_orderpriority")
-        .agg(
-            F.max("n").cast("bigint").alias("n_orders"),
-            pick(25, "p25"), pick(50, "p50"), pick(75, "p75"), pick(95, "p95"),
-        )
-        .orderBy("o_orderpriority")
-    )
+    picks = {"p25": 25, "p50": 50, "p75": 75, "p95": 95}
+    return exact_percentiles(
+        d, ["o_orderpriority"], ["lag_days", "o_orderkey"], "lag_days", picks,
+        "n_orders",
+    ).orderBy("o_orderpriority")
 
 
 ORACLE_FULFILLMENT_LAG = """
@@ -1100,22 +1053,20 @@ def q_user_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-axis complement of key_skew_report's hot-key table, and the
     number that says whether "engagement" is broad or three whales. Top-k%
     cohort sizes are exact ceil rank math ((k·n + 99) DIV 100); shares
-    are exact 10³-grid integers; the rank rides _global_disc_rank (users
-    ordered by count desc with a user_id tie-break via a negated count
-    column — the helper ranks ascending).
+    are exact 10³-grid integers; the rank is ``operators.ordered_prefix``'s
+    row number (users ordered by count desc with a user_id tie-break).
 
     Scale shape: events collapse to per-user counts in one exchange; the
-    rank pass is the ranged row_number (or one small window task under
-    the size switch); the conditional sums fold to ONE row."""
-    n_parts = spark.sparkContext.defaultParallelism
+    rank pass is one small window task under the operator's size switch,
+    the ranged row number above it; the conditional sums fold to ONE
+    row."""
     s = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .withColumn("_negc", -F.col("cnt"))
     )
     nu = s.count()  # bounded driver value; also picks the rank strategy
-    r = _global_disc_rank(s, ["_negc", "user_id"], n_parts, n_rows=nu)
+    r = ordered_prefix(s, [F.desc("cnt"), "user_id"], "rn", n_rows=nu)
     cut = lambda k: (k * nu + 99) // 100  # noqa: E731
     return r.agg(
         F.lit(nu).cast("bigint").alias("n_users"),
@@ -1467,13 +1418,13 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Frequency (order count) and Monetary (decimal-exact spend), then
     report segment sizes and spend. Quartiles are exact rank math
     (((rn−1)·4) DIV n + 1 over a fully tie-broken order — no percentile
-    sketch, no float), and each of the three ranks rides
-    ``_global_disc_rank`` (ranged row_number + row-count offsets), so no
-    pass has a single-partition exchange. Output ≤ 4³ rows.
+    sketch, no float), and each of the three ranks is an
+    ``operators.ordered_prefix`` row number: one window task each under
+    its size switch, the ranged form with no single-partition exchange
+    above it. Output ≤ 4³ rows.
 
     Recency quartile 1 = most recent; frequency/monetary quartile 4 =
     most orders / highest spend (ascending rank)."""
-    n_parts = spark.sparkContext.defaultParallelism
     o = load(spark, sf_dir, "orders")
     s = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max(F.col("o_orderdate").cast("date")).alias("_last"),
@@ -1487,12 +1438,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recency_days", F.datediff(F.col("_mx"), F.col("_last")).cast("bigint")
     ).drop("_last", "_mx")
     nc = s.count()  # bounded driver value; also picks the rank strategy
-    r = _global_disc_rank(s, ["recency_days", "custkey"], n_parts, n_rows=nc)
-    r = r.withColumnRenamed("rn", "rn_r")
-    r = _global_disc_rank(r, ["n_orders", "custkey"], n_parts, n_rows=nc)
-    r = r.withColumnRenamed("rn", "rn_f")
-    r = _global_disc_rank(r, ["spend", "custkey"], n_parts, n_rows=nc)
-    r = r.withColumnRenamed("rn", "rn_m")
+    r = ordered_prefix(s, ["recency_days", "custkey"], "rn_r", n_rows=nc)
+    r = ordered_prefix(r, ["n_orders", "custkey"], "rn_f", n_rows=nc)
+    r = ordered_prefix(r, ["spend", "custkey"], "rn_m", n_rows=nc)
     quart = lambda c: F.expr(f"(({c} - 1) * 4) DIV {nc} + 1").cast("int")  # noqa: E731
     return (
         r.select(

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pegasus_spark.crawler.bloom import SHARD_SCHEMA, BloomShards
 from pegasus_spark.crawler.cdc import APARTMENTS_DDL
 from pegasus_spark.crawler.urlnorm import host_of, with_url_columns
+from pegasus_spark.operators import ordered_prefix
 from pegasus_spark.session import local_df
 
 FRONTIER_DDL = (
@@ -106,18 +107,6 @@ def dequeue(frontier: DataFrame, budget: DataFrame) -> DataFrame:
     )
 
 
-SEQ_SCALABLE_THRESHOLD = 100_000  # rows/round above which the global window loses
-
-
-def _seq_keys():
-    return [
-        F.desc("priority"),
-        F.asc(F.coalesce("region", F.lit(""))),
-        F.asc("page"),
-        F.asc("url"),
-    ]
-
-
 def with_dequeue_seq(
     dequeued: DataFrame, round_no: int, n_rows: int | None = None,
     n_partitions: int | None = None,
@@ -125,54 +114,25 @@ def with_dequeue_seq(
     """Global canonical sequence over this round's batch — the golden crawl
     ordering (parallelism-independent by construction; §4.3 contract).
 
-    Two physical strategies, same logical result (the order keys end in the
-    unique url, so the total order — and therefore every seq — is identical):
+    seq is the row number in (priority DESC, region, page, url) order,
+    through ``operators.ordered_prefix``: the order ends in the unique url,
+    so every seq is the same on both of its physical forms. A round of
+    10^3-10^4 rows (``n_rows``, which the scheduler always passes) is one
+    cheap global-window task; a larger or unsized batch sequences at full
+    parallelism with no single-partition exchange.
 
-    - small batches (≤ SEQ_SCALABLE_THRESHOLD, or unknown): one global
-      row_number window. A single-partition exchange, but for 10^3-10^4 rows
-      it is one cheap task — faster than a range-sampling pass.
-    - large batches: repartitionByRange on the canonical keys →
-      sortWithinPartitions → per-partition row_number + per-partition offset
-      (a ≤n_partitions-row collect). No single-partition exchange anywhere;
-      millions of rows/round sequence at full parallelism. Range boundaries
-      only decide placement, never the seq value, so sampling nondeterminism
-      cannot leak into the golden ordering.
-
-    seq is BIGINT on both paths (a round can exceed 2^31 rows at the
+    seq is BIGINT on both forms (a round can exceed 2^31 rows at the
     10^10-URL design point, and a single type keeps multi-round fetch_log
-    parquet reads schema-stable across the strategy switch). The large path
-    localCheckpoints the range-partitioned batch: offsets are collected from
-    those partitions, so placement must be FROZEN — a lineage recompute
-    after an eviction would re-run the range sampling and could shift rows
-    across partitions after the offsets were fixed. The checkpoint blocks
-    are reclaimed by Spark's ContextCleaner when the returned DataFrame is
-    released (unlike the round-2 ``persist()``, which leaked a cached copy
-    of every large batch for the session lifetime)."""
-    keys = _seq_keys()
-    if n_rows is None or n_rows <= SEQ_SCALABLE_THRESHOLD:
-        w = Window.orderBy(*keys)
-        return dequeued.withColumn(
-            "seq", F.row_number().over(w).cast("bigint")
-        ).withColumn("round", F.lit(round_no))
-    n = n_partitions or dequeued.sparkSession.sparkContext.defaultParallelism
-    d = (
-        dequeued.repartitionByRange(n, *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    from pegasus_spark.operators import range_prefix_offsets
-
-    off_map = range_prefix_offsets(d)
-    w = Window.partitionBy("_pid").orderBy(*keys)
-    return (
-        d.withColumn(
-            "seq",
-            (F.row_number().over(w).cast("bigint") + off_map[F.col("_pid")].cast("bigint")),
-        )
-        .drop("_pid")
-        .withColumn("round", F.lit(round_no))
-    )
+    parquet reads schema-stable across the size switch)."""
+    keys = [
+        F.desc("priority"),
+        F.asc(F.coalesce("region", F.lit(""))),
+        F.asc("page"),
+        F.asc("url"),
+    ]
+    return ordered_prefix(
+        dequeued, keys, "seq", n_rows=n_rows, n_partitions=n_partitions
+    ).withColumn("round", F.lit(round_no))
 
 
 # ---------------------------------------------------------------------------

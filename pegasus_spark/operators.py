@@ -18,7 +18,14 @@ per key).
 
 bucket_pairs: the candidate-then-verify similarity join — explode bucket
 keys, equality-join, verify each candidate pair — behind every near-dup
-family in textops and multimodal."""
+family in textops and multimodal.
+
+ordered_prefix: a row number, running sum or running max over a global
+total order, size-switched between one global window and a ranged form with
+no single-partition exchange — behind the crawl's golden seq, the exact
+ranks, sequence packing's token offsets and the Pareto sweep.
+
+exact_percentiles: per-group percentile_disc by integer rank math."""
 
 from __future__ import annotations
 
@@ -191,68 +198,123 @@ def bucket_pairs(
     return pairs.distinct() if multi else pairs
 
 
-def range_prefix_max(frozen: DataFrame, value_col: str, floor_value: int = -1):
-    """Per-partition EXCLUSIVE prefix maxima for a range-partitioned frame —
-    the max-monoid sibling of ``range_prefix_offsets`` (same contract:
-    ``frozen`` carries ``_pid`` = spark_partition_id() taken AFTER
-    repartitionByRange on the sweep order and is already eagerly
-    localCheckpointed, because the ≤ n_partitions-row collect below reads
-    that placement). Returns a map Column _pid → max(value_col) over all
-    EARLIER partitions, ``floor_value`` for the first partition (and for
-    any prefix that is all-NULL — ANSI MAX skips NULLs). Used by sweep
-    algorithms (Pareto frontier) that need "running max so far" without a
-    single-partition global window: partition-local window + this offset
-    = the exact global prefix max."""
-    per_pid = {
-        int(r["_pid"]): r["v"]
-        for r in frozen.groupBy("_pid").agg(F.max(value_col).alias("v")).collect()
-    }
-    offsets, acc = {}, floor_value
-    for pid in sorted(per_pid):  # range partitions are ordered by the keys
-        offsets[pid] = acc
-        v = per_pid[pid]
-        if v is not None and v > acc:
-            acc = v
-    return F.create_map(
-        *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
+
+
+# Up to this many rows a global window is one cheap task, cheaper than the
+# ranged form's checkpoint and offset collect; above it, or when the size
+# is unknown, ordered_prefix takes the ranged form. The one size switch of
+# every global sequence, running sum and running max.
+PREFIX_WINDOW_MAX_ROWS = 100_000
+
+
+def ordered_prefix(
+    df: DataFrame,
+    order: list,
+    out: str,
+    value: str | None = None,
+    agg: str = "count",
+    exclusive: bool = False,
+    n_rows: int | None = None,
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """Adds ``out``: a running aggregate over the total order ``order`` —
+    a global sequence (``agg="count"``, the row number), a running sum of
+    ``value`` (``"sum"``) or a running max of it (``"max"``).
+    ``exclusive`` leaves each row out of its own prefix. ``order`` must end
+    in a unique key, so the order is total and every value deterministic.
+
+    NULL values are skipped. Over no values a sum reads 0 and a max reads
+    NULL, the identity a caller replaces with its own floor. A count is
+    BIGINT.
+
+    Two physical forms, same rows:
+
+    - ``n_rows`` known and ≤ PREFIX_WINDOW_MAX_ROWS: one global window, a
+      single-partition exchange of one cheap task.
+    - otherwise, an unknown size included: repartitionByRange on the
+      order, an eager localCheckpoint, one aggregate per partition
+      collected to the driver (≤ n_partitions rows), then a window
+      partitioned by the partition id, shifted by the aggregate of every
+      earlier partition. No single-partition exchange anywhere; range
+      boundaries decide only where a row lands, never its value."""
+
+    def running(w):
+        if agg == "count":
+            rn = F.row_number().over(w)
+            return (rn - 1 if exclusive else rn).cast("bigint")
+        w = w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else Window.currentRow)
+        if agg == "sum":
+            return F.coalesce(F.sum(value).over(w), F.lit(0))
+        return F.max(value).over(w)
+
+    if n_rows is not None and n_rows <= PREFIX_WINDOW_MAX_ROWS:
+        return df.withColumn(out, running(Window.orderBy(*order)))
+    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    # The offsets are collected from this placement, so it is FROZEN before
+    # the collect: a lineage recompute that re-sampled the range boundaries
+    # afterwards would move rows across partitions and silently shift every
+    # offset. Spark's ContextCleaner reclaims the checkpoint blocks when the
+    # returned frame is released.
+    frozen = (
+        df.repartitionByRange(n, *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
+    off = _partition_offsets(frozen, value, agg)
+    local = running(Window.partitionBy("_pid").orderBy(*order))
+    merged = F.greatest(local, off) if agg == "max" else local + off
+    return frozen.withColumn(out, merged).drop("_pid")
 
 
-def range_prefix_offsets(frozen: DataFrame, value_col: str | None = None):
-    """Per-partition exclusive prefix offsets for a range-partitioned frame —
-    the shared second half of the "global sequence / global prefix sum
-    without a single-partition exchange" pattern (frontier.with_dequeue_seq
-    for row_number seqs; textops.text.sequence_pack for token-offset sums).
+def _partition_offsets(frozen: DataFrame, value, agg: str) -> Column:
+    """Per row of ``frozen``, the count, sum or max over every EARLIER
+    range partition (range partition ids ascend with the order): a
+    ≤ n_partitions-entry literal map looked up by ``_pid``. The first
+    partition reads the identity, 0 or NULL."""
+    if agg == "count":
+        part = F.count(F.lit(1))
+    elif agg == "sum":
+        part = F.coalesce(F.sum(value), F.lit(0))  # an all-NULL partition adds 0
+    else:
+        part = F.max(value)
+    rows = frozen.groupBy("_pid").agg(part.alias("v")).collect()
+    acc = None if agg == "max" else 0
+    kv = []
+    for pid, v in sorted((r["_pid"], r["v"]) for r in rows):
+        kv += [F.lit(pid), F.lit(acc)]
+        if agg != "max":
+            acc += v
+        elif v is not None:
+            acc = v if acc is None else max(acc, v)
+    # an empty frame has no partition to look up; any constant types the column
+    return F.create_map(*kv)[F.col("_pid")] if kv else F.lit(acc)
 
-    ``frozen`` must carry a ``_pid`` = spark_partition_id() column taken
-    AFTER repartitionByRange on the ordering keys, and must already be
-    FROZEN (eager localCheckpoint): the offsets are collected from that
-    placement, so a lineage recompute that re-samples range boundaries
-    after the collect would shift rows across partitions and silently
-    corrupt every downstream offset. That invariant lives HERE — callers
-    checkpoint before calling, and this function only reads the frozen
-    frame.
 
-    ``value_col=None`` counts rows per partition (offset for a row_number
-    sequence); otherwise sums ``value_col`` (offset for a running sum).
-    Returns a map Column keyed by _pid — a ≤ n_partitions-entry literal,
-    the documented bounded-driver-collect pattern (the collect is one row
-    per partition, never data rows)."""
-    # coalesce: a partition whose value_col is all-NULL sums to NULL (ANSI
-    # SUM skips nulls) — it contributes 0 to downstream offsets, not a crash
-    agg = (
-        F.count(F.lit(1))
-        if value_col is None
-        else F.coalesce(F.sum(value_col), F.lit(0))
-    ).alias("v")
-    per_pid = {
-        int(r["_pid"]): int(r["v"])
-        for r in frozen.groupBy("_pid").agg(agg).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(per_pid):  # range partitions are ordered by the keys
-        offsets[pid] = acc
-        acc += per_pid[pid]
-    return F.create_map(
-        *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
+def exact_percentiles(
+    df: DataFrame,
+    group: list[str],
+    order: list[str],
+    value: str,
+    picks: dict[str, int],
+    n_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """Exact percentile_disc per group: for each ``name: p`` in ``picks``
+    the ``value`` at row (p·n + 99) DIV 100 of its group in ``order`` —
+    integer rank math, so no float enters and the SQL twin agrees bit for
+    bit — plus the group's row count as ``n_col`` and any ``extra``
+    aggregates, one row per group. The window partitions on ``group``;
+    an empty ``group`` is one global window, a single task."""
+    ranked = df.withColumn(
+        "rn", F.row_number().over(Window.partitionBy(*group).orderBy(*order))
+    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy(*group)))
+    return ranked.groupBy(*group).agg(
+        F.max("n").cast("bigint").alias(n_col),
+        *[
+            F.max(
+                F.when(F.col("rn") == F.expr(f"({p} * n + 99) DIV 100"), F.col(value))
+            ).alias(name)
+            for name, p in picks.items()
+        ],
+        *extra,
     )

@@ -184,7 +184,7 @@ def minhash_accuracy(
     sort-merge exchanges (measured 11.2 → 5.4 s for the t≥1 verify). The
     participant count is one tiny job over the already-checkpointed pair
     table — the same physical size-switch pattern as the scheduler's bloom
-    probe and _global_disc_rank."""
+    probe and operators.ordered_prefix."""
     pairs = minhash_near_dups(
         df, n_hashes, k, bands, rows, min_sig_match, id_col
     ).localCheckpoint(eager=True)  # LSH-bounded rows; stops subtree re-runs

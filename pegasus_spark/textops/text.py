@@ -18,6 +18,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from pegasus_spark.operators import ordered_prefix
+
 # language marker stopwords — tiny fixed sets; the SQL oracles build their
 # list literals from these. Order of the argmax CASE chain is part of the
 # contract.
@@ -286,40 +288,17 @@ def pareto_frontier(
     larger y and dominates; an earlier-x predecessor dominates iff its
     y ≥ y); (3) join winners back to the rows by (x, y).
 
-    The sweep needs a global prefix max but never a single-partition
-    window: repartitionByRange on the sweep order, partition-local
-    running-max window, then ``range_prefix_max`` offsets (the
-    with_dequeue_seq / sequence_pack_ranged machinery, max-monoid form —
-    a ≤ n_partitions-row driver collect, placement frozen by eager
-    localCheckpoint BEFORE the collect). y must be a non-negative
-    integer (the -1 prefix floor is the identity below any real y)."""
-    from pyspark.sql import Window as W
-
-    from pegasus_spark.operators import range_prefix_max
-
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    pts = (
-        df.select(x_col, y_col)
-        .distinct()
-        .repartitionByRange(n, F.desc(x_col), F.desc(y_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # freeze placement BEFORE the collect
-    )
-    off = range_prefix_max(pts, y_col)
-    w = (
-        W.partitionBy("_pid")
-        .orderBy(F.desc(x_col), F.desc(y_col))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
+    The sweep's running max is ``operators.ordered_prefix``'s exclusive
+    max, floored at -1 for the first point: y must be a non-negative
+    integer. With no size given it takes the ranged form, so no
+    single-partition window at any corpus size."""
+    pts = df.select(x_col, y_col).distinct()
     frontier = (
-        pts.withColumn(
-            "_mx",
-            F.greatest(
-                F.coalesce(F.max(y_col).over(w), F.lit(-1)),
-                off[F.col("_pid")],
-            ),
+        ordered_prefix(
+            pts, [F.desc(x_col), F.desc(y_col)], "_mx", value=y_col, agg="max",
+            exclusive=True, n_partitions=n_partitions,
         )
-        .filter(F.col("_mx") < F.col(y_col))
+        .filter(F.coalesce("_mx", F.lit(-1)) < F.col(y_col))
         .select(x_col, y_col)
     )
     return (
@@ -765,17 +744,9 @@ def line_dedup(
     )
 
 
-# strategy switch for sequence_pack, same convention as the scheduler's
-# dequeue-seq switch (frontier.SEQ_SCALABLE_THRESHOLD): below it a single
-# global running-sum window is ONE cheap task; above it the range+offsets
-# plan sequences at full parallelism with no single-partition exchange.
-SEQPACK_SCALABLE_THRESHOLD = 100_000
-
-
 def sequence_pack(
     df: DataFrame, seq_len: int = 2048, id_col: str = "doc_id",
     n_rows: int | None = None, n_partitions: int | None = None,
-    ranged: bool | None = None,
 ) -> DataFrame:
     """GPT-style concat-and-chunk sequence packing — the training-loader
     layout (Brown et al. 2020 §2.1; every mainstream LLM data loader): the
@@ -789,76 +760,33 @@ def sequence_pack(
     its sequences, all exact BIGINT integer division (DIV, mirrored as //
     in the SQL twin — no float enters the chunk math at any corpus size).
 
-    Two physical strategies, same logical result (the with_dequeue_seq
-    pattern, crawler/frontier.py:117 — a global prefix sum is the same
-    problem as a global sequence number, just SUM instead of row_number):
-
-    - small inputs (``n_rows`` unknown or ≤ SEQPACK_SCALABLE_THRESHOLD):
-      one global running-sum window — a single-partition exchange, fine
-      for one task's worth of rows.
-    - large inputs (or ``ranged=True``): repartitionByRange on the id →
-      partition-local running sum + per-partition token-total offsets
-      (a ≤ n_partitions-row collect, the documented bounded driver
-      pattern). No single-partition exchange anywhere; range boundaries
-      only decide placement, never the offset value, so sampling
-      nondeterminism cannot leak into the output — the placement is
-      FROZEN (localCheckpoint) before offsets are collected, exactly as
-      the frontier path does, because a lineage recompute could re-sample
-      boundaries after the offsets were fixed.
+    The start offset is ``operators.ordered_prefix``'s exclusive running
+    sum in id order (a global prefix sum is the same problem as the
+    crawl's golden sequence, SUM instead of row_number): one global window
+    when ``n_rows`` is known and small, otherwise the ranged form with no
+    single-partition exchange.
 
     NULL-text contract (shared with every text op here; ANSI size(NULL) is
     NULL): a null doc contributes NOTHING to the concatenation stream —
     SUM skips NULLs, so other docs' offsets are unaffected on both
-    strategies — and its own n_tokens/last_seq/n_seqs are NULL
+    forms — and its own n_tokens/last_seq/n_seqs are NULL
     (pinned by tests). Null hygiene belongs upstream (the F5
     malformed-row drop / gopher_rules), not silently coerced here.
     """
-    from pyspark.sql import Window
-
-    sized = with_token_count(df).select(id_col, "n_tokens")
-    if ranged is None:
-        ranged = n_rows is not None and n_rows > SEQPACK_SCALABLE_THRESHOLD
-
-    def finish(with_start: DataFrame) -> DataFrame:
-        first = F.expr(f"start_off DIV {seq_len}")
-        last = F.expr(f"(start_off + n_tokens - 1) DIV {seq_len}")
-        return with_start.select(
-            id_col,
-            "n_tokens",
-            F.col("start_off").cast("bigint").alias("start_off"),
-            first.cast("bigint").alias("first_seq"),
-            last.cast("bigint").alias("last_seq"),
-            (last - first + F.lit(1)).cast("int").alias("n_seqs"),
-        )
-
-    if not ranged:
-        w = Window.orderBy(id_col).rowsBetween(Window.unboundedPreceding, -1)
-        return finish(
-            sized.withColumn(
-                "start_off",
-                F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint"),
-            )
-        )
-    from pegasus_spark.operators import range_prefix_offsets
-
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        sized.repartitionByRange(n, id_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # freeze placement BEFORE the collect
+    sized = ordered_prefix(
+        with_token_count(df).select(id_col, "n_tokens"), [id_col], "start_off",
+        value="n_tokens", agg="sum", exclusive=True, n_rows=n_rows,
+        n_partitions=n_partitions,
     )
-    off_map = range_prefix_offsets(d, value_col="n_tokens")
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return finish(
-        d.withColumn(
-            "start_off",
-            F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint")
-            + off_map[F.col("_pid")].cast("bigint"),
-        ).drop("_pid")
+    first = F.expr(f"start_off DIV {seq_len}")
+    last = F.expr(f"(start_off + n_tokens - 1) DIV {seq_len}")
+    return sized.select(
+        id_col,
+        "n_tokens",
+        "start_off",
+        first.cast("bigint").alias("first_seq"),
+        last.cast("bigint").alias("last_seq"),
+        (last - first + F.lit(1)).cast("int").alias("n_seqs"),
     )
 
 

@@ -1322,8 +1322,9 @@ class TestSpendOutliers:
         assert got == want
         assert got, "gate is degenerate: no 3xMAD outliers"
 
-    def test_global_disc_rank_matches_window(self, spark):
-        from pegasus_spark.analytics.queries import _global_disc_rank, load
+    def test_ordered_prefix_rank_matches_window(self, spark):
+        from pegasus_spark.analytics.queries import load
+        from pegasus_spark.operators import ordered_prefix
         import pyspark.sql.functions as SF
         from pyspark.sql import Window as W
 
@@ -1334,7 +1335,7 @@ class TestSpendOutliers:
         )
         got = {
             r["k"]: r["rn"]
-            for r in _global_disc_rank(s, ["c", "k"], 13).collect()
+            for r in ordered_prefix(s, ["c", "k"], "rn", n_partitions=13).collect()
         }
         want = {
             r["k"]: r["rn"]
@@ -1347,7 +1348,7 @@ class TestSpendOutliers:
         # physical choice: identical rows
         switched = {
             r["k"]: r["rn"]
-            for r in _global_disc_rank(s, ["c", "k"], 13, n_rows=10).collect()
+            for r in ordered_prefix(s, ["c", "k"], "rn", n_rows=10).collect()
         }
         assert switched == want
 

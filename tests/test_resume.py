@@ -208,7 +208,7 @@ def test_scalable_seq_matches_window_seq(spark):
         "retry_cnt int",
     ).repartition(8)
     small = with_dequeue_seq(df, 3, n_rows=10).select("url", "seq")
-    big = with_dequeue_seq(df, 3, n_rows=10_000_000, n_partitions=8)
+    big = with_dequeue_seq(df, 3, n_partitions=8)
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, "scalable seq path must not funnel"
     got = {r["url"]: r["seq"] for r in big.select("url", "seq").collect()}

@@ -594,14 +594,14 @@ class TestSequencePack:
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-        base = sequence_pack(docs, seq_len=256)
+        base = sequence_pack(docs, seq_len=256, n_rows=len(rows))
         plan = base._jdf.queryExecution().executedPlan().toString()
         assert "SinglePartition" in plan  # the small-input form, by design
 
         expect = sorted(tuple(r) for r in base.collect())
         for n_parts in (2, 5, 13):
             ranged = sequence_pack(
-                docs, seq_len=256, ranged=True, n_partitions=n_parts
+                docs, seq_len=256, n_partitions=n_parts
             )
             rplan = ranged._jdf.queryExecution().executedPlan().toString()
             # the range exchange itself sits behind the localCheckpoint
@@ -638,7 +638,7 @@ class TestSequencePack:
         clean = spark.createDataFrame(
             [r for r in rows if r[1] is not None], "doc_id long, text string"
         )
-        for kw in ({}, {"ranged": True, "n_partitions": 3}):
+        for kw in ({"n_rows": 3}, {"n_partitions": 3}):
             got = {r["doc_id"]: r for r in sequence_pack(docs, 4, **kw).collect()}
             ref = {r["doc_id"]: r for r in sequence_pack(clean, 4, **kw).collect()}
             assert got[2]["n_tokens"] is None
